@@ -360,10 +360,10 @@ object Bench {
     val total = cold.values.sum
     // stop BEFORE printing: the JSON lines must be the LAST thing on
     // stdout so a tail capture of the run always contains all of them.
-    // Exactly TWO stdout lines, least-important first: the cold map,
-    // then the tiny final summary. The warm map goes to a file — three
-    // stdout lines (r7–r9) always cost the head of the cold map in the
-    // driver's bounded tail capture.
+    // Exactly THREE stdout lines, least-important first: `cold_full`
+    // (the full per-query object, the one a bounded tail capture may
+    // clip), then the compact `cold` centisec map, then the tiny
+    // `total` summary. The warm map goes to a file.
     spark.stop()
     val warmOut = new java.io.File("target/bench_warm.json")
     warmOut.getParentFile.mkdirs()

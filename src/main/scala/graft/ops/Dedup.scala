@@ -116,14 +116,6 @@ object Dedup {
   def minhashFromBase(hv: Column, numHashes: Int): Column =
     graft.functions.Vectors.affineMinhash(hv, minhashConstants(numHashes), MinhashP)
 
-  /** Scale-path signature: xxhash64 with per-function seed (codegen'd,
-   * no md5 cost). Not oracle-portable — verified against
-   * [[minhashSignature]] structurally in tests. */
-  def minhashSignatureFast(sh: Column, numHashes: Int): Column =
-    transform(
-      sequence(lit(0), lit(numHashes - 1)),
-      seed => array_min(transform(sh, s => xxhash64(s, seed))))
-
   /**
    * MinHash + LSH near-duplicate pairs: signatures are cut into `bands`
    * bands of `rowsPerBand` values; docs sharing any band hash become
@@ -490,8 +482,6 @@ object Dedup {
       labels = nextM
       iter += 1
     }
-    if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-      System.err.println(s"CC_DEBUG rounds=$iter converged=$converged")
     edges.unpersist(blocking = false)
     labels
   }

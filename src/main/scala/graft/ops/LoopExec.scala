@@ -27,13 +27,14 @@ object LoopExec {
   def smallRows(spark: SparkSession): Long =
     spark.conf.getOption(SmallRowsConf).map(_.toLong).getOrElse(DefaultSmallRows)
 
-  /** True when every measured state size is known and under the
-   * threshold — callers must include EVERY table a round's joins can
-   * touch (a small label table joined against a huge static edge list
-   * must stay on the AQE path). */
+  /** True when at least one state size was measured and every one is
+   * known and under the threshold — callers must include EVERY table a
+   * round's joins can touch (a small label table joined against a huge
+   * static edge list must stay on the AQE path). No measurement at all
+   * proves nothing, so it keeps the AQE path too. */
   def isSmall(spark: SparkSession, stateRows: Option[Long]*): Boolean = {
     val t = smallRows(spark)
-    stateRows.forall(_.exists(_ <= t))
+    stateRows.nonEmpty && stateRows.forall(_.exists(_ <= t))
   }
 
   /** Runs `body` (which must EXECUTE its round eagerly — the conf is

@@ -19,9 +19,8 @@ object Relational {
     if (types.contains(Event.MatchAny)) events // F2 wildcard
     else events.filter(col("event_type").isin(types: _*))
 
-  /** F8 — range predicates (reference: src/Rule.php:27-48). */
+  /** F8 — range predicate (reference: src/Rule.php:27-48). */
   def rangeInclusive(v: Column, lo: Double, hi: Double): Column = v.between(lo, hi)
-  def rangeExclusive(v: Column, lo: Double, hi: Double): Column = v > lo && v < hi
 
   /**
    * F7 — ValidateEnrichFilter (reference: src/Rule/ValidateEnrichFilter.php:39-91):

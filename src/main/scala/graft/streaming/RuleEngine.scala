@@ -2,8 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.model.Event
 import graft.rules.{OutputData, RuleSpec}
@@ -37,36 +37,48 @@ import graft.rules.{OutputData, RuleSpec}
  *    deliberately order-free, so equivalence holds only for streams
  *    without same-key timestamp ties — true of the fixtures).
  *
- * Scale design: the batch face never collects a group into memory —
- * it repartitions by (rule, key), sorts within partitions by event
- * time, and streams over consecutive runs (mapPartitions). State per
- * key is O(live matchers × chainLimit). The streaming face is the same
- * step function inside `flatMapGroupsWithState` with event-time
- * timeouts driven by the watermark.
+ * One kernel, two routings, two faces. Every face runs the same
+ * per-group kernel ([[interpret]]) over a group's rules. Keyed routing
+ * ([[runBatch]], [[runStreaming]]) makes one group per (rule, key):
+ * the kernel on a one-rule group, where nothing is left to suppress and
+ * registration order is creation order. Aligned routing
+ * ([[runBatchAligned]], [[runStreamingAligned]]) makes one group per
+ * key holding every rule in declaration order. The batch face
+ * repartitions by group, sorts within partitions by event time and
+ * streams over consecutive runs (mapPartitions, no per-group
+ * materialisation); the streaming face is the same kernel inside one
+ * `flatMapGroupsWithState` with event-time timeouts driven by the
+ * watermark. State per group is O(live matchers × chainLimit).
  */
 object RuleEngine {
 
   /** One live matcher instance (reference Matcher state,
    * src/StateMachine/AEventProcessor.php:435-457). `seq` is the
-   * matcher's REGISTRATION number within its key group — the aligned
-   * faces allocate it monotonically across ALL rules so equal-deadline
-   * timeouts can fire in registration order, the reference's stable
-   * uasort semantics (src/CorrelationEngine.php:515-523: the sort is
-   * stable over one queue of every rule's matchers, so same-deadline
-   * matchers keep the order they were armed in, not declaration
-   * order). Single-rule faces leave it 0: within one rule the matcher
-   * vector is already in creation order and the stable per-rule sort
-   * preserves it. A progressing matcher KEEPS its seq (the reference
-   * mutates the same Matcher object in place — its queue position
-   * doesn't change on progress). */
+   * matcher's REGISTRATION number within its group — the kernel
+   * allocates it monotonically across ALL the group's rules so
+   * equal-deadline timeouts can fire in registration order, the
+   * reference's stable uasort semantics (src/CorrelationEngine.php:515-523:
+   * the sort is stable over one queue of every rule's matchers, so
+   * same-deadline matchers keep the order they were armed in, not
+   * declaration order). A progressing matcher KEEPS its seq (the
+   * reference mutates the same Matcher object in place — its queue
+   * position doesn't change on progress). */
   case class MatcherState(
       step: Int,
       chain: Seq[Event],
       timeoutAtUs: Option[Long],
       seq: Long = 0L)
 
-  /** All live matchers for one (rule, key) group. */
-  case class KeyState(matchers: Seq[MatcherState])
+  /** Streaming state of one group: one matcher vector per rule of the
+   * group, indexed by declaration order. `ruleSetId` fingerprints the
+   * rule list that wrote it: positional indexing means a checkpoint
+   * restarted with a CHANGED rule list would silently hand one rule
+   * another rule's matchers. On mismatch the whole group's state is
+   * discarded — a keyed group whose rule left the rule set resolves to
+   * no rules and so mismatches too (the reference drops un-restorable
+   * matchers the same way: missing rule classes alias to UndefinedRule;
+   * src/CorrelationEngine.php:680-766). */
+  case class GroupMatchers(perRule: Seq[Seq[MatcherState]], ruleSetId: String)
 
   /** A fire record: one onComplete/onTimeout/onProgress dispatch
    * (reference fire(), src/StateMachine/AEventProcessor.php:522-537). */
@@ -81,9 +93,15 @@ object RuleEngine {
       outputs: Seq[OutputData])
 
   /** Internal routing row (public: Catalyst codegen needs access).
+   * `rule` is the group tag: the rule name under keyed routing,
+   * [[AlignedTag]] under aligned routing, empty for a clock tick.
    * `eventTime` duplicates event.effectiveTime at the top level so the
    * streaming face can watermark it after routing. */
   case class Keyed(rule: String, key: String, eventTime: Timestamp, event: Event)
+
+  /** Group tag of aligned routing: non-empty, so it never reads as a
+   * clock tick. */
+  private val AlignedTag = "*"
 
   /** Max concurrent matchers per key — the explicit bound replacing the
    * reference's GC/memory-pressure valves. */
@@ -95,6 +113,9 @@ object RuleEngine {
   private def requireUniqueNames(rules: Seq[RuleSpec]): Unit =
     require(rules.map(_.name).distinct.size == rules.size,
       s"duplicate rule names: ${rules.map(_.name).diff(rules.map(_.name).distinct).distinct.mkString(", ")}")
+
+  /** Declaration-order fingerprint for [[GroupMatchers]]. */
+  private def ruleSetId(rules: Seq[RuleSpec]): String = rules.map(_.name).mkString("\u0000")
 
   /** Microsecond precision throughout: the fixtures carry µs timestamps
    * and Timestamp.getTime would truncate to ms. */
@@ -108,89 +129,103 @@ object RuleEngine {
   }
 
   // ---------------------------------------------------------------
-  // Core step function (shared by batch + streaming faces)
+  // The kernel (shared by every face)
   // ---------------------------------------------------------------
 
-  /** Feed one event-time-ordered event into the matcher set; returns
-   * updated matchers + fires. Pure function — no engine state.
-   * `emitTimeouts=false` destroys due matchers silently (the
-   * reference's HISTORICAL_IGNORE_TIMEOUT replay mode,
-   * src/StateMachine/AEventProcessor.php:130-132,377-383). */
-  private def stepOne(
-      rule: RuleSpec,
+  /** Interpret one group: feed its event-time-ordered `events` through
+   * `rules`, then advance the clock to `untilUs` (Long.MaxValue is the
+   * end-of-data flush, Long.MinValue advances nothing). Per event the
+   * clock first advances to the event's time ([[fireDue]]), then the
+   * event is offered to the rules in declaration order and a
+   * `suppressOnMatch` rule that consumes it halts the remaining rules —
+   * the reference's single-threaded loop (reference:
+   * src/CorrelationEngine.php:191-202 clock advance, 230-236 suppress
+   * breaks the matcher loop and skips new-matcher instantiation).
+   * Timeouts of ALL rules still fire on clock advance regardless of
+   * suppression. `historical` is batch replay, where rules with
+   * `historicalIgnoreTimeout` destroy due matchers silently (reference
+   * HISTORICAL_IGNORE_TIMEOUT, src/StateMachine/AEventProcessor.php:130-132,377-383).
+   * Mutates `matchers` (one vector per rule) and returns the fires in
+   * emission order. */
+  private def interpret(
+      rules: IndexedSeq[RuleSpec],
       key: String,
-      matchers: Vector[MatcherState],
-      e: Event,
-      emitTimeouts: Boolean = true): (Vector[MatcherState], Vector[Fired]) = {
-    val (m1, f1) = fireDue(rule, key, matchers, micros(e.effectiveTime), emitTimeouts)
-    val (m2, f2, _) = offer(rule, key, m1, e)
-    (m2, f1 ++ f2)
+      matchers: Array[Vector[MatcherState]],
+      events: Iterator[Event],
+      untilUs: Long,
+      historical: Boolean): Vector[Fired] = {
+    // one registration counter across ALL rules of the group (see
+    // MatcherState.seq), resumed past every restored matcher's seq so
+    // arming order stays monotone across micro-batches
+    var nextSeq = matchers.iterator.flatMap(_.iterator.map(_.seq + 1)).foldLeft(0L)(math.max)
+    val alloc = () => { val s = nextSeq; nextSeq += 1; s }
+    val out = Vector.newBuilder[Fired]
+    events.foreach { e =>
+      out ++= fireDue(rules, key, matchers, micros(e.effectiveTime), historical)
+      var suppressed = false
+      var i = 0
+      while (i < rules.size && !suppressed) {
+        val r = rules(i)
+        if (r.mightAccept(e.event)) {
+          val (alive, fs, handled) = offer(r, key, matchers(i), e, alloc)
+          matchers(i) = alive
+          out ++= fs
+          suppressed = handled && r.suppressOnMatch
+        }
+        i += 1
+      }
+    }
+    out ++= fireDue(rules, key, matchers, untilUs, historical)
+    out.result()
   }
 
-  /** Virtual clock: fire timeouts due strictly before/at `nowUs`
-   * (reference advances the clock to event time − 1ms then fires; an
-   * event AT the deadline still cannot be consumed → <=). */
-  private def fireDue(
-      rule: RuleSpec,
-      key: String,
-      matchers: Vector[MatcherState],
-      nowUs: Long,
-      emitTimeouts: Boolean): (Vector[MatcherState], Vector[Fired]) = {
-    val (due, alive) = matchers.partition(_.timeoutAtUs.exists(_ <= nowUs))
-    val fires =
-      if (emitTimeouts) due.sortBy(_.timeoutAtUs.get).map { m =>
-        fired(rule, key, "timeout", microsToTs(m.timeoutAtUs.get), m.chain, rule.onTimeout(m.chain))
-      } else Vector.empty[Fired]
-    (alive, fires)
-  }
-
-  /** Clock advance across ALL rules of an aligned face: due timeouts
-   * fire in GLOBAL deadline order, ties in rule-declaration order.
-   * The reference keeps ONE deadline-sorted queue over every running
-   * matcher regardless of class (uasort by timeout,
-   * src/CorrelationEngine.php:515-523; the stable sort leaves equal
-   * deadlines in registration order, which for matchers armed by the
-   * same event is declaration order). Firing rule-by-rule instead
-   * would emit rule A's later deadline before rule B's earlier one
-   * whenever both aged past the clock between two events — a
-   * cross-rule emission-order deviation q_e6 pins. Due matchers of
-   * rules where `emitFor` is false are destroyed silently (the
-   * historical-ignore replay mode), same as [[fireDue]]. Mutates
-   * `matchers` in place. */
-  private def fireDueAcross(ruleArr: IndexedSeq[RuleSpec], key: String,
+  /** Virtual clock: fire the group's timeouts due at or before `nowUs`
+   * (the reference advances the clock to event time − 1ms then fires;
+   * an event AT the deadline still cannot be consumed → <=), across ALL
+   * its rules in GLOBAL deadline order. The reference keeps ONE
+   * deadline-sorted queue over every running matcher regardless of
+   * class (uasort by timeout, src/CorrelationEngine.php:515-523);
+   * firing rule-by-rule instead would emit rule A's later deadline
+   * before rule B's earlier one whenever both aged past the clock
+   * between two events — a cross-rule emission-order deviation q_e6
+   * pins. Mutates `matchers` in place. */
+  private def fireDue(rules: IndexedSeq[RuleSpec], key: String,
       matchers: Array[Vector[MatcherState]], nowUs: Long,
-      emitFor: RuleSpec => Boolean): Vector[Fired] = {
+      historical: Boolean): Vector[Fired] = {
+    val isDue = (m: MatcherState) => m.timeoutAtUs.exists(_ <= nowUs)
     val dues = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, MatcherState)]
     var i = 0
     while (i < matchers.length) {
-      val (due, alive) = matchers(i).partition(_.timeoutAtUs.exists(_ <= nowUs))
-      matchers(i) = alive
-      if (emitFor(ruleArr(i)))
-        due.foreach(m => dues += ((m.timeoutAtUs.get, i, m)))
+      if (matchers(i).exists(isDue)) {
+        val (due, alive) = matchers(i).partition(isDue)
+        matchers(i) = alive
+        if (!(historical && rules(i).historicalIgnoreTimeout))
+          due.foreach(m => dues += ((m.timeoutAtUs.get, i, m)))
+      }
       i += 1
     }
     // equal deadlines fire in REGISTRATION order (the allocator seq),
     // the reference's stable single-queue uasort: a matcher armed
-    // earlier fires first even if its rule is declared later. Rule
-    // index is the final fallback for seq-less (restored v0) state;
-    // the sort is stable so same-rule matchers keep creation order.
-    dues.sortBy(t => (t._1, t._3.seq, t._2)).iterator.map { case (_, ri, m) =>
-      fired(ruleArr(ri), key, "timeout", microsToTs(m.timeoutAtUs.get), m.chain,
-        ruleArr(ri).onTimeout(m.chain))
+    // earlier fires first even if its rule is declared later; rule
+    // index breaks any remaining tie
+    if (dues.isEmpty) Vector.empty
+    else dues.sortBy(t => (t._1, t._3.seq, t._2)).iterator.map { case (_, ri, m) =>
+      fired(rules(ri), key, "timeout", microsToTs(m.timeoutAtUs.get), m.chain,
+        rules(ri).onTimeout(m.chain))
     }.toVector
   }
 
-  /** Offer the event to each live matcher in creation order; spawn with
-   * the duplicate-start guard. Returns (alive, fires, handled).
-   * `alloc` hands a fresh registration seq to each NEWLY spawned
-   * matcher (see [[MatcherState.seq]]); progressing matchers keep
-   * theirs. Single-rule faces use the 0-allocator default. */
+  /** Offer the event to each live matcher of one rule in creation
+   * order; spawn with the duplicate-start guard. Returns (alive, fires,
+   * handled). `alloc` hands a fresh registration seq to each NEWLY
+   * spawned matcher (see [[MatcherState.seq]]); progressing matchers
+   * keep theirs. */
   private def offer(
       rule: RuleSpec,
       key: String,
       alive0: Vector[MatcherState],
       e: Event,
-      alloc: () => Long = () => 0L): (Vector[MatcherState], Vector[Fired], Boolean) = {
+      alloc: () => Long): (Vector[MatcherState], Vector[Fired], Boolean) = {
     val eUs = micros(e.effectiveTime)
     var fires = Vector.empty[Fired]
     var alive = Vector.empty[MatcherState]
@@ -236,17 +271,22 @@ object RuleEngine {
       chain.lastOption.map(_.effectiveTime).getOrElse(at),
       outputs)
 
-  /** Interpret an ordered run of events for one (rule, key). */
-  private def interpretRun(
-      rule: RuleSpec,
-      key: String,
-      events: Iterator[Event],
-      initial: Vector[MatcherState]): (Vector[MatcherState], Vector[Fired]) =
-    events.foldLeft((initial, Vector.empty[Fired])) {
-      case ((ms, fs), e) =>
-        val (ms2, fs2) = stepOne(rule, key, ms, e)
-        (ms2, fs ++ fs2)
-    }
+  // ---------------------------------------------------------------
+  // Routing
+  // ---------------------------------------------------------------
+
+  /** Keyed routing: one row per rule that might accept the event, in
+   * the group (rule name, rule key). */
+  private def keyedRoute(rules: Seq[RuleSpec]): Event => Iterator[Keyed] =
+    e => rules.iterator.filter(_.mightAccept(e.event))
+      .map(r => Keyed(r.name, r.correlate(e), e.effectiveTime, e))
+
+  private def keyedGroups(rules: Seq[RuleSpec]): Map[String, IndexedSeq[RuleSpec]] =
+    rules.map(r => r.name -> IndexedSeq(r)).toMap
+
+  /** Aligned routing: every event to the group (AlignedTag, key). */
+  private def alignedRoute(key: Event => String): Event => Iterator[Keyed] =
+    e => Iterator.single(Keyed(AlignedTag, key(e), e.effectiveTime, e))
 
   // ---------------------------------------------------------------
   // Batch face
@@ -270,13 +310,31 @@ object RuleEngine {
   def runBatch(events: Dataset[Event], rules: Seq[RuleSpec],
       numPartitions: Int = 0): Dataset[Fired] = {
     requireUniqueNames(rules)
+    replay(events, keyedRoute(rules), keyedGroups(rules), numPartitions)
+  }
+
+  /**
+   * Aligned-key batch face with deterministic cross-rule suppress
+   * ordering (F6; SURVEY §7.5.1 hard part): all rules share one
+   * correlation key, are evaluated in declaration order per event, and
+   * a `suppressOnMatch` rule that consumes the event halts the
+   * remaining rules (see [[interpret]]). Due timeouts fire in GLOBAL
+   * deadline order across rules ([[fireDue]]). Same scale shape as
+   * [[runBatch]]: one shuffle on the key, sorted runs, no per-group
+   * materialisation.
+   */
+  def runBatchAligned(events: Dataset[Event], rules: Seq[RuleSpec],
+      key: Event => String): Dataset[Fired] = {
+    requireUniqueNames(rules)
+    replay(events, alignedRoute(key), Map(AlignedTag -> rules.toIndexedSeq), 0)
+  }
+
+  /** The batch body of both routings: one shuffle by group, sorted
+   * runs, the kernel over each run with the end-of-data flush. */
+  private def replay(events: Dataset[Event], route: Event => Iterator[Keyed],
+      groups: Map[String, IndexedSeq[RuleSpec]], numPartitions: Int): Dataset[Fired] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val ruleMap = rules.map(r => r.name -> r).toMap
-    val keyed = events.flatMap { e =>
-      rules.iterator.filter(_.mightAccept(e.event))
-        .map(r => Keyed(r.name, r.correlate(e), e.effectiveTime, e))
-    }
     // numPartitions: callers with KNOWN-tiny inputs (cron tick grids,
     // control streams) pass a small explicit count — the default
     // session shuffle width pays ~32 task setups + in-partition sorts
@@ -285,7 +343,7 @@ object RuleEngine {
     val parts =
       if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
-    keyed
+    events.flatMap(route)
       .repartition(parts, $"rule", $"key")
       // eventTime = effectiveTime (receivedTime override applied) — the
       // engine's clock, NOT raw datetime
@@ -296,332 +354,99 @@ object RuleEngine {
           def hasNext: Boolean = buf.hasNext
           def next(): Iterator[Fired] = {
             val head = buf.head
-            val rule = ruleMap(head.rule)
-            val emit = !rule.historicalIgnoreTimeout
-            var out = Vector.empty[Fired]
-            var matchers = Vector.empty[MatcherState]
-            while (buf.hasNext && buf.head.rule == head.rule && buf.head.key == head.key) {
-              val (m2, fs) = stepOne(rule, head.key, matchers, buf.next().event, emit)
-              matchers = m2
-              out ++= fs
+            val rules = groups(head.rule)
+            val run = new Iterator[Event] {
+              def hasNext: Boolean =
+                buf.hasNext && buf.head.rule == head.rule && buf.head.key == head.key
+              def next(): Event = buf.next().event
             }
-            // end-of-data flush: no later event can save these matchers
-            if (emit) matchers
-              .filter(_.timeoutAtUs.isDefined)
-              .sortBy(_.timeoutAtUs.get)
-              .foreach { m =>
-                out :+= fired(rule, head.key, "timeout",
-                  microsToTs(m.timeoutAtUs.get), m.chain, rule.onTimeout(m.chain))
-              }
-            out.iterator
+            interpret(rules, head.key, Array.fill(rules.size)(Vector.empty[MatcherState]),
+              run, Long.MaxValue, historical = true).iterator
           }
         }.flatten
       }
   }
-
-  /**
-   * Aligned-key batch face with deterministic cross-rule suppress
-   * ordering (F6; SURVEY §7.5.1 hard part): all rules share one
-   * correlation key, are evaluated in declaration order per event, and
-   * a `suppressOnMatch` rule that consumes the event halts the
-   * remaining rules — the reference's single-threaded loop semantics
-   * (reference: src/CorrelationEngine.php:230-236 suppress breaks the
-   * matcher loop and skips new-matcher instantiation). Timeouts of ALL
-   * rules still fire on clock advance regardless of suppression
-   * (reference fires triggerTimeouts before handling each event), in
-   * GLOBAL deadline order across rules ([[fireDueAcross]]).
-   * Same scale shape as [[runBatch]]: one shuffle on the key, sorted
-   * runs, no per-group materialisation.
-   */
-  def runBatchAligned(events: Dataset[Event], rules: Seq[RuleSpec],
-      key: Event => String): Dataset[Fired] = {
-    requireUniqueNames(rules)
-    val spark = events.sparkSession
-    import spark.implicits._
-    val ruleArr = rules.toIndexedSeq
-    val keyed = events.map(e => Keyed("", key(e), e.effectiveTime, e))
-    keyed
-      .repartition($"key")
-      .sortWithinPartitions($"key", $"eventTime", $"event.id")
-      .mapPartitions { it =>
-        new Iterator[Iterator[Fired]] {
-          private val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): Iterator[Fired] = {
-            val k = buf.head.key
-            val matchers = Array.fill(ruleArr.size)(Vector.empty[MatcherState])
-            // one registration counter across ALL rules of the key:
-            // equal-deadline timeouts fire in arming order (see
-            // MatcherState.seq)
-            var nextSeq = 0L
-            val alloc = () => { val s = nextSeq; nextSeq += 1; s }
-            var out = Vector.empty[Fired]
-            while (buf.hasNext && buf.head.key == k) {
-              val e = buf.next().event
-              val eUs = micros(e.effectiveTime)
-              // clock advance: due timeouts across ALL rules fire
-              // first, in global deadline order (see fireDueAcross)
-              out ++= fireDueAcross(ruleArr, k, matchers, eUs,
-                r => !r.historicalIgnoreTimeout)
-              // declaration-order evaluation with suppress short-circuit
-              var suppressed = false
-              var i = 0
-              while (i < ruleArr.size && !suppressed) {
-                val r = ruleArr(i)
-                if (r.mightAccept(e.event)) {
-                  val (m, f, handled) = offer(r, k, matchers(i), e, alloc)
-                  matchers(i) = m
-                  out ++= f
-                  if (handled && r.suppressOnMatch) suppressed = true
-                }
-                i += 1
-              }
-            }
-            // end-of-data flush (same contract as runBatch), still in
-            // global deadline order across rules
-            out ++= fireDueAcross(ruleArr, k, matchers, Long.MaxValue,
-              r => !r.historicalIgnoreTimeout)
-            out.iterator
-          }
-        }.flatten
-      }
-  }
-
-  /** Per-key state for the aligned faces: one matcher vector per rule,
-   * indexed by declaration order. `ruleSetId` fingerprints the rule
-   * list that wrote the state: positional indexing means a checkpoint
-   * restarted with a CHANGED rule list would silently hand one rule
-   * another rule's matchers — worse than the missing-rule crash the
-   * keyed face tolerates. On mismatch the whole key's state is
-   * discarded (the reference drops un-restorable matchers the same
-   * way; src/CorrelationEngine.php:680-766). */
-  case class AlignedState(perRule: Seq[Seq[MatcherState]], ruleSetId: String)
-
-  /** Declaration-order fingerprint for [[AlignedState]]. */
-  def ruleSetId(rules: Seq[RuleSpec]): String = rules.map(_.name).mkString("\u0000")
 
   // ---------------------------------------------------------------
   // Streaming face
   // ---------------------------------------------------------------
 
   /**
-   * Streaming face: the same step function inside
-   * `flatMapGroupsWithState` with `EventTimeTimeout`. The watermark is
-   * applied here (on the routed rows' top-level eventTime — mapping
-   * strips watermark tags, so callers can't pre-apply it). Within a
-   * micro-batch, a group's events are sorted by event time (micro-batch
-   * volumes per key are small); across batches the state store carries
-   * matchers and the watermark drives timeout firing — the
-   * microbatch-granularity analogue of the reference's armed loop timer
-   * (reference: src/CorrelationEngine.php:530-563).
+   * Streaming face: the kernel inside `flatMapGroupsWithState` with
+   * `EventTimeTimeout`. The watermark is applied here (on the routed
+   * rows' top-level eventTime — mapping strips watermark tags, so
+   * callers can't pre-apply it). Within a micro-batch, a group's events
+   * are sorted by event time (micro-batch volumes per key are small);
+   * across batches the state store carries matchers and the watermark
+   * drives timeout firing — the microbatch-granularity analogue of the
+   * reference's armed loop timer (reference:
+   * src/CorrelationEngine.php:530-563).
    */
   def runStreaming(events: Dataset[Event], rules: Seq[RuleSpec],
       watermarkDelay: String = "0 seconds"): Dataset[Fired] = {
     requireUniqueNames(rules)
+    live(events, keyedRoute(rules), keyedGroups(rules), watermarkDelay)
+  }
+
+  /**
+   * Streaming aligned face: suppress-ordered rule evaluation
+   * (see [[runBatchAligned]]) — one group per correlation key, per-rule
+   * matcher vectors in state, watermark timers on the earliest deadline
+   * across all rules.
+   */
+  def runStreamingAligned(events: Dataset[Event], rules: Seq[RuleSpec],
+      key: Event => String, watermarkDelay: String = "0 seconds"): Dataset[Fired] = {
+    requireUniqueNames(rules)
+    live(events, alignedRoute(key), Map(AlignedTag -> rules.toIndexedSeq), watermarkDelay)
+  }
+
+  /** The streaming body of both routings: the one stateful operator. */
+  private def live(events: Dataset[Event], route: Event => Iterator[Keyed],
+      groups: Map[String, IndexedSeq[RuleSpec]], watermarkDelay: String): Dataset[Fired] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val ruleMap = rules.map(r => r.name -> r).toMap
-    // Events matching no rule still must advance the event-time clock
+    val ids = groups.map { case (tag, rules) => tag -> ruleSetId(rules) }
+    // Events routed to no group still must advance the event-time clock
     // (they carry the watermark, like the reference's virtual clock
-    // advancing on every event) — route them as no-op ticks to one
-    // dummy group that never holds state.
-    val keyed = events.flatMap { e =>
-      val routed = rules.filter(_.mightAccept(e.event))
-        .map(r => Keyed(r.name, r.correlate(e), e.effectiveTime, e))
-      if (routed.nonEmpty) routed else Seq(Keyed("", "", e.effectiveTime, e))
-    }
-    keyed
+    // advancing on every event) — route them as no-op ticks.
+    events.flatMap { e =>
+        val routed = route(e)
+        if (routed.hasNext) routed else Iterator.single(Keyed("", "", e.effectiveTime, e))
+      }
       .withWatermark("eventTime", watermarkDelay)
-      // dummy clock ticks have done their job once the watermark node
-      // has seen them — dropping them here avoids shuffling the bulk of
-      // a mostly-non-matching stream into one hot ("","") group
+      // ticks have done their job once the watermark node has seen
+      // them — dropping them here avoids shuffling the bulk of a
+      // mostly-non-matching stream into one hot ("","") group
       .filter(_.rule.nonEmpty)
       .groupByKey(k => (k.rule, k.key))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: (String, String), it: Iterator[Keyed], state: GroupState[KeyState]) => {
-          // key._1 empty: the no-op clock-tick group. ruleMap miss:
-          // checkpointed state for a rule ABSENT from the current rule
-          // set (a restart with a changed rule list) — drop its
-          // matchers and continue, the reference's restore tolerance
-          // (missing rule classes alias to UndefinedRule and are
-          // discarded; reference: src/CorrelationEngine.php:680-766).
-          if (key._1.isEmpty || !ruleMap.contains(key._1)) {
-            it.foreach(_ => ()); state.remove(); Iterator.empty
-          }
+        (group: (String, String), it: Iterator[Keyed], state: GroupState[GroupMatchers]) => {
+          // a tag absent from `groups` is checkpointed state of a rule
+          // that left the rule set: it resolves to no rules, its
+          // fingerprint mismatches and its matchers are dropped
+          val rules = groups.getOrElse(group._1, IndexedSeq.empty[RuleSpec])
+          val id = ids.getOrElse(group._1, "")
+          val matchers = state.getOption
+            .filter(_.ruleSetId == id)
+            .map(_.perRule.map(_.toVector).toArray)
+            .getOrElse(Array.fill(rules.size)(Vector.empty[MatcherState]))
+          val sorted = it.map(_.event).toVector.sortBy(e => (micros(e.effectiveTime), e.id))
+          // a timed-out call has no rows: the watermark passed the
+          // earliest deadline, so the clock advances to it
+          val untilUs =
+            if (state.hasTimedOut) state.getCurrentWatermarkMs() * 1000L // ms → µs
+            else Long.MinValue
+          val fires = interpret(rules, group._2, matchers, sorted.iterator, untilUs,
+            historical = false)
+          if (matchers.forall(_.isEmpty)) state.remove()
           else {
-          val rule = ruleMap(key._1)
-          val matchers0 = state.getOption.map(_.matchers.toVector).getOrElse(Vector.empty)
-
-          val (matchers, fires) =
-            if (state.hasTimedOut) {
-              // watermark passed the earliest deadline: fire all due
-              val wm = state.getCurrentWatermarkMs() * 1000L // ms → µs
-              val (due, alive) = matchers0.partition(_.timeoutAtUs.exists(_ <= wm))
-              val fs = due.sortBy(_.timeoutAtUs.get).map { m =>
-                fired(rule, key._2, "timeout", microsToTs(m.timeoutAtUs.get),
-                  m.chain, rule.onTimeout(m.chain))
-              }
-              (alive, fs)
-            } else {
-              val sorted = it.map(_.event).toVector.sortBy(e => (micros(e.effectiveTime), e.id))
-              interpretRun(rule, key._2, sorted.iterator, matchers0)
-            }
-
-          if (matchers.isEmpty) state.remove()
-          else {
-            state.update(KeyState(matchers))
-            matchers.flatMap(_.timeoutAtUs).minOption
+            state.update(GroupMatchers(matchers.toSeq, id))
+            matchers.iterator.flatMap(_.flatMap(_.timeoutAtUs)).minOption
               // µs → ms, ceiling: the timer must not fire before the
               // deadline or the due-check would no-op and re-arm
               .foreach(us => state.setTimeoutTimestamp(math.floorDiv(us + 999L, 1000L)))
           }
           fires.iterator
-          }
-        })
-  }
-
-  /**
-   * Spark-4-native streaming face on `transformWithState`: the same
-   * step machine, but state lives in a typed `ValueState` column family
-   * and timeouts use the API's true per-key TIMER service
-   * (`registerTimer`/`handleExpiredTimer`) — a 1:1 mapping of the
-   * reference's armed loop timer (reference:
-   * src/CorrelationEngine.php:530-563, single earliest-deadline timer,
-   * re-armed after each fire). Functionally equivalent to
-   * [[runStreaming]] (asserted in tests); preferred on Spark 4
-   * clusters: RocksDB column-family state, native timer multiplexing
-   * and state TTL come built in. Requires the RocksDB state store
-   * provider (`spark.sql.streaming.stateStore.providerClass`).
-   */
-  class RuleProcessor(rules: Seq[RuleSpec])
-      extends StatefulProcessor[(String, String), Keyed, Fired] {
-    private lazy val ruleMap = rules.map(r => r.name -> r).toMap
-    @transient private var matchers: ValueState[KeyState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      matchers = getHandle.getValueState[KeyState](
-        "matchers", Encoders.product[KeyState], TTLConfig.NONE)
-
-    /** Persist survivors and re-arm the single earliest-deadline timer
-     * (delete-then-register keeps exactly one live timer per key). */
-    private def commit(alive: Vector[MatcherState]): Unit = {
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      if (alive.isEmpty) matchers.clear()
-      else {
-        matchers.update(KeyState(alive))
-        alive.flatMap(_.timeoutAtUs).minOption
-          // µs → ms, ceiling: must not fire before the deadline
-          .foreach(us => getHandle.registerTimer(math.floorDiv(us + 999L, 1000L)))
-      }
-    }
-
-    override def handleInputRows(key: (String, String), rows: Iterator[Keyed],
-        tv: TimerValues): Iterator[Fired] = ruleMap.get(key._1) match {
-      case None => // restore tolerance — see runStreaming
-        rows.foreach(_ => ()); commit(Vector.empty); Iterator.empty
-      case Some(rule) =>
-        val initial = if (matchers.exists()) matchers.get().matchers.toVector else Vector.empty
-        val sorted = rows.map(_.event).toVector.sortBy(e => (micros(e.effectiveTime), e.id))
-        val (alive, fires) = interpretRun(rule, key._2, sorted.iterator, initial)
-        commit(alive)
-        fires.iterator
-    }
-
-    override def handleExpiredTimer(key: (String, String), tv: TimerValues,
-        expired: ExpiredTimerInfo): Iterator[Fired] = ruleMap.get(key._1) match {
-      case None => // restore tolerance — see runStreaming
-        commit(Vector.empty); Iterator.empty
-      case Some(rule) =>
-        val initial = if (matchers.exists()) matchers.get().matchers.toVector else Vector.empty
-        val wmUs = tv.getCurrentWatermarkInMs() * 1000L
-        val (alive, fires) = fireDue(rule, key._2, initial, wmUs, emitTimeouts = true)
-        commit(alive)
-        fires.iterator
-    }
-  }
-
-  /** [[runStreaming]] on the Spark 4 `transformWithState` operator —
-   * see [[RuleProcessor]]. Same routing/watermark discipline. */
-  def runStreamingTws(events: Dataset[Event], rules: Seq[RuleSpec],
-      watermarkDelay: String = "0 seconds"): Dataset[Fired] = {
-    requireUniqueNames(rules)
-    val spark = events.sparkSession
-    import spark.implicits._
-    val keyed = events.flatMap { e =>
-      val routed = rules.filter(_.mightAccept(e.event))
-        .map(r => Keyed(r.name, r.correlate(e), e.effectiveTime, e))
-      if (routed.nonEmpty) routed else Seq(Keyed("", "", e.effectiveTime, e))
-    }
-    keyed
-      .withWatermark("eventTime", watermarkDelay)
-      .filter(_.rule.nonEmpty) // clock ticks counted by the watermark node
-      .groupByKey(k => (k.rule, k.key))
-      .transformWithState(new RuleProcessor(rules), TimeMode.EventTime, OutputMode.Append)
-  }
-
-  /**
-   * Streaming aligned face: suppress-ordered rule evaluation
-   * (see [[runBatchAligned]]) on `flatMapGroupsWithState` — one group
-   * per correlation key, per-rule matcher vectors in state, watermark
-   * timers on the earliest deadline across all rules.
-   */
-  def runStreamingAligned(events: Dataset[Event], rules: Seq[RuleSpec],
-      key: Event => String, watermarkDelay: String = "0 seconds"): Dataset[Fired] = {
-    requireUniqueNames(rules)
-    val spark = events.sparkSession
-    import spark.implicits._
-    val ruleArr = rules.toIndexedSeq
-    val rsId = ruleSetId(rules)
-    events
-      .map(e => Keyed("", key(e), e.effectiveTime, e))
-      .withWatermark("eventTime", watermarkDelay)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (k: String, it: Iterator[Keyed], state: GroupState[AlignedState]) => {
-          val matchers: Array[Vector[MatcherState]] =
-            state.getOption
-              // rule-list change across a restart: positional state no
-              // longer lines up — discard it (see AlignedState docs)
-              .filter(_.ruleSetId == rsId)
-              .map(_.perRule.map(_.toVector).toArray)
-              .getOrElse(Array.fill(ruleArr.size)(Vector.empty[MatcherState]))
-          // resume the registration counter past every live matcher's
-          // seq so cross-batch arming order stays monotone
-          var nextSeq = matchers.iterator.flatMap(_.iterator.map(_.seq + 1))
-            .foldLeft(0L)(math.max)
-          val alloc = () => { val s = nextSeq; nextSeq += 1; s }
-          var out = Vector.empty[Fired]
-
-          if (state.hasTimedOut) {
-            val wm = state.getCurrentWatermarkMs() * 1000L
-            out ++= fireDueAcross(ruleArr, k, matchers, wm, _ => true)
-          } else {
-            val sorted = it.map(_.event).toVector.sortBy(e => (micros(e.effectiveTime), e.id))
-            sorted.foreach { e =>
-              val eUs = micros(e.effectiveTime)
-              out ++= fireDueAcross(ruleArr, k, matchers, eUs, _ => true)
-              var suppressed = false
-              var i = 0
-              while (i < ruleArr.size && !suppressed) {
-                val r = ruleArr(i)
-                if (r.mightAccept(e.event)) {
-                  val (alive, fs, handled) = offer(r, k, matchers(i), e, alloc)
-                  matchers(i) = alive
-                  out ++= fs
-                  if (handled && r.suppressOnMatch) suppressed = true
-                }
-                i += 1
-              }
-            }
-          }
-
-          if (matchers.forall(_.isEmpty)) state.remove()
-          else {
-            state.update(AlignedState(matchers.toSeq, rsId))
-            matchers.iterator.flatMap(_.flatMap(_.timeoutAtUs)).minOption
-              .foreach(us => state.setTimeoutTimestamp(math.floorDiv(us + 999L, 1000L)))
-          }
-          out.iterator
         })
   }
 }

@@ -76,7 +76,9 @@ object PlanDump {
           // stub — the LoopProbe hook dumps each ROUND's
           // pre-materialization frame alongside, so per-iteration plan
           // claims carry committed evidence. Hook is cleared before
-          // the timed trials: plan capture must never tax them.
+          // the timed trials (plan capture must never tax them) and
+          // also when the query throws, so a later loop query never
+          // writes its rounds under this query's name.
           graft.ops.LoopProbe.hook = Some { (label, ldf) =>
             val lw = new java.io.PrintWriter(
               new java.io.File(outDir, s"${name}_loop_$label.txt"), "UTF-8")
@@ -84,10 +86,12 @@ object PlanDump {
               org.apache.spark.sql.execution.FormattedMode))
             finally lw.close()
           }
-          val df = fn(spark, sfDir)
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          graft.ops.LoopProbe.hook = None
+          val (df, plan) =
+            try {
+              val df = fn(spark, sfDir)
+              (df, df.queryExecution.explainString(
+                org.apache.spark.sql.execution.FormattedMode))
+            } finally graft.ops.LoopProbe.hook = None
           val w = new java.io.PrintWriter(
             new java.io.File(outDir, s"$name.txt"), "UTF-8")
           try w.println(plan) finally w.close()

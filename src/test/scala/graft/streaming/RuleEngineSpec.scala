@@ -414,7 +414,7 @@ class RuleEngineSpec extends SparkSpec {
     assert(funnelCounts == streamCounts)
   }
 
-  test("transformWithState face equals batch face (RocksDB state, native timers)") {
+  test("streaming face equals batch face on RocksDB state") {
     import spark.implicits._
     val rules = Seq(orderRule())
     val events = Seq(
@@ -423,15 +423,16 @@ class RuleEngineSpec extends SparkSpec {
       ev("2024-01-01 11:00:00", "signup", "u2", "3"), // never paid → timeout
       ev("2024-01-01 14:00:00", "view", "u3", "4"))   // watermark push
 
-    // transformWithState requires the RocksDB state store provider
+    // the one stateful operator runs on any state store provider: same
+    // fires on RocksDB as on the default HDFS-backed store
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[Event]
-    val query = RuleEngine.runStreamingTws(stream.toDS(), rules)
-      .writeStream.format("memory").queryName("rule_tws_out")
+    val query = RuleEngine.runStreaming(stream.toDS(), rules)
+      .writeStream.format("memory").queryName("rule_rocksdb_out")
       .outputMode("append").start()
     try {
       events.foreach { e => stream.addData(e); query.processAllAvailable() }
@@ -442,13 +443,63 @@ class RuleEngineSpec extends SparkSpec {
       prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
     }
 
-    val streamed = spark.table("rule_tws_out").as[RuleEngine.Fired]
+    val streamed = spark.table("rule_rocksdb_out").as[RuleEngine.Fired]
       .collect().filter(f => f.kind == "complete" || f.kind == "timeout")
       .map(f => (f.rule, f.key, f.kind, f.firedAt)).toSet
     val batch = RuleEngine.runBatch(ds(events: _*), rules)
       .collect().filter(f => f.kind == "complete" || f.kind == "timeout")
       .map(f => (f.rule, f.key, f.kind, f.firedAt)).toSet
     assert(streamed == batch)
+    assert(batch.exists(_._3 == "timeout") && batch.exists(_._3 == "complete"))
+  }
+
+  test("keyed batch face is the aligned batch face on one-rule groups (fixture corpus, fire order included)") {
+    import spark.implicits._
+    // the keyed face routes each rule to its own (rule, key) group; run
+    // rule by rule through the aligned face under the rule's own key it
+    // must emit the same fires in the same per-group order. The day-grid
+    // copy manufactures same-instant events within a key, so equal
+    // deadlines must fire in registration order on both faces (q_e5);
+    // every fire carries its chain's event ids to tell tied fires apart.
+    val key = (e: Event) => e.payload("key")
+    val ids = (ch: Seq[Event]) => Seq(OutputData.action("ids", Map("ids" -> ch.flatMap(_.id).mkString(","))))
+    val rules = Seq(
+      orderRule(),
+      RuleSpec("signup_purchase_error",
+        Seq(Set("signup"), Set("purchase"), Set("error")),
+        Some(Duration.ofHours(2)), key),
+      RuleSpec.sessionGap("sess", Set(Event.MatchAny), Duration.ofMinutes(30), key,
+        onGap = ch => Seq(OutputData.action("closed", Map("n" -> ch.size.toString)))),
+      RuleSpec("quiet_replay", Seq(Set("view"), Set("purchase")),
+        Some(Duration.ofMinutes(45)), key, historicalIgnoreTimeout = true))
+      .map(_.copy(onComplete = ids, onTimeout = ids))
+    val corpus = graft.Tables.eventsTyped(spark, "/root/testdata/sf0.001")
+    val grid = corpus.map(e => e.copy(
+      datetime = new Timestamp(math.floorDiv(e.effectiveTime.getTime, 86400000L) * 86400000L),
+      receivedTime = None))
+    // per (rule, key): the fires in emission order (runs are contiguous
+    // per group within a partition, and collect keeps partition order)
+    def byGroup(fires: Array[RuleEngine.Fired]) =
+      fires.toSeq.filter(f => f.kind == "complete" || f.kind == "timeout")
+        .groupBy(f => (f.rule, f.key))
+        .map { case (g, fs) => g -> fs.map(f => (f.kind, f.firedAt, f.outputs)) }
+    Seq("raw" -> corpus, "grid" -> grid).foreach { case (name, events) =>
+      val keyed = byGroup(RuleEngine.runBatch(events, rules).collect())
+      val aligned = byGroup(rules.flatMap(r =>
+        RuleEngine.runBatchAligned(events, Seq(r), r.correlate).collect()).toArray)
+      assert(keyed == aligned, s"$name: groups differ: " +
+        (keyed.keySet ++ aligned.keySet).filter(g => keyed.get(g) != aligned.get(g)).take(3)
+          .map(g => s"$g keyed=${keyed.get(g)} aligned=${aligned.get(g)}").mkString("; "))
+      assert(keyed.values.exists(_.exists(_._1 == "complete")) &&
+        keyed.values.exists(_.exists(_._1 == "timeout")), name)
+      if (name == "grid") {
+        // the grid really produces equal-deadline ties within a group
+        assert(keyed.values.exists { fs =>
+          val ts = fs.filter(_._1 == "timeout").map(_._2)
+          ts.distinct.size < ts.size
+        }, "no equal-deadline timeouts in the grid corpus")
+      }
+    }
   }
 
   test("J6 streaming chaining: emitted event completes a downstream rule in the same run, equal to batch-chained face") {
