@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Archives, AudioFp, Captions, VideoDup, Correlate, Dedup, ImageHash, Ingest, Metrics, Multimodal, Pii, Relational, Sampling, Schedule, Similarity, TextAnalysis, ZstdTransport}
+import graft.ops.{Archives, AudioFp, Captions, VideoDup, Correlate, Dedup, ImageHash, Ingest, Materialize, Metrics, Multimodal, Pii, Relational, Sampling, Schedule, Similarity, TextAnalysis, ZstdTransport}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
  *
@@ -812,7 +812,7 @@ object SparkEntry {
     // keep every unclustered image plus the min-id representative
     // per cluster. The fixture's even/odd pairs keep the even ids
     "q_m33_image_dedup" -> ((s, _) => {
-      val hashes = ImageHash.dhashTable(s, Tables.imagedup(s)).localCheckpoint()
+      val hashes = Materialize(ImageHash.dhashTable(s, Tables.imagedup(s)))
       val clusters = Dedup.duplicateClusters(
         ImageHash.nearDupPairs(hashes)
           .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))

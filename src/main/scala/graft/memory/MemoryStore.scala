@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialize
+
 /**
  * Collective memory: the reference's hierarchical KV store with TTL
  * (reference: src/Memory/MemoryEntry.php:241-279,
@@ -102,11 +104,10 @@ object MemoryStore {
    * JsonFileBackend.php:181-251). Overwrite — the table IS the
    * backend's current state, not a log. */
   def save(memory: DataFrame, path: String): Unit =
-    persistentEntries(memory).select(columns.map(col): _*)
-      // sever lineage before overwriting: the store commonly descends
-      // from load() on the SAME path (load → applyWrites → save), and
-      // Spark refuses to overwrite a path its plan still reads
-      .localCheckpoint()
+    // sever lineage before overwriting: the store commonly descends
+    // from load() on the SAME path (load → applyWrites → save), and
+    // Spark refuses to overwrite a path its plan still reads
+    Materialize(persistentEntries(memory).select(columns.map(col): _*))
       .write.mode("overwrite").parquet(path)
 
   /**

@@ -684,9 +684,9 @@ object Archives {
    * count; and without the unpersist each run leaks a
    * MEMORY_AND_DISK InMemoryRelation of decoded bodies into the
    * session (the 200k probe measured the unmanaged q_w30 composition
-   * at ~11× one walk). localCheckpoint is the single-JVM break; on a
-   * cluster a caller materializes `f`'s result itself (write, or
-   * reliable checkpoint) before the cache is released. */
+   * at ~11× one walk). `f`'s result goes through [[Materialize]]
+   * before the cache is released, so on a cluster (a context with a
+   * checkpoint directory) it is a reliable checkpoint. */
   def withPageTable(spark: SparkSession, media: DataFrame,
       project: Seq[String] = Nil)(
       f: DataFrame => DataFrame): DataFrame = {
@@ -696,7 +696,7 @@ object Archives {
     val pages = (if (project.isEmpty) walk
                  else walk.select(project.map(col): _*))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try f(pages).localCheckpoint()
+    try Materialize(f(pages))
     finally pages.unpersist()
   }
 
@@ -1619,37 +1619,26 @@ object Archives {
    * host (bucketing, [[Layout.writeBucketed]]) makes every iteration
    * exchange-free except the aggregation.
    *
-   * Fault tolerance (pluggable lineage breaks): the node/edge
-   * materialization and the every-3rd-iteration rank break all go
-   * through ONE strategy. With `checkpointDir` set — the CLUSTER
-   * mode — they are RELIABLE `checkpoint()`s (`setCheckpointDir` +
-   * an HDFS/object-store write: an executor loss mid-iteration
-   * recovers from the store; the edge list is written once and
-   * re-read per iteration, never pinned in executor block storage).
-   * Without it — the single-JVM / exploratory mode — they are
-   * `localCheckpoint`s: fastest, and the executor-loss caveat is
-   * vacuous when the only executor IS the driver. Materializing the
-   * edges (rather than persisting lazily) also truncates the
+   * Fault tolerance: the node/edge materialization and the
+   * every-3rd-iteration rank break are [[Materialize]] breaks — on a
+   * cluster (a context with a checkpoint directory) reliable
+   * checkpoints, so an executor loss mid-iteration recovers from the
+   * store and the edge list is written once and re-read per
+   * iteration, never pinned in executor block storage. Each rank
+   * break is released once the next one supersedes it. Materializing
+   * the edges (rather than persisting lazily) also truncates the
    * LOGICAL plan: each iteration otherwise re-optimizes the full
    * upstream extraction subtree, a driver-side cost that grows with
    * the pipeline feeding the graph. */
-  def hostRank(graph: DataFrame, iterations: Int = 10,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def hostRank(graph: DataFrame, iterations: Int = 10): DataFrame = {
     val scale = 1000000000000L
-    checkpointDir.foreach(d =>
-      graph.sparkSession.sparkContext.setCheckpointDir(d))
-    def break(df: DataFrame): DataFrame = checkpointDir match {
-      case Some(_) => df.checkpoint()
-      case None    => df.localCheckpoint()
-    }
     // node/edge counts ride the two one-time breaks as observe
     // metrics (no extra jobs) and feed the small-round gate below
-    val obsN = org.apache.spark.sql.Observation()
-    val obsE = org.apache.spark.sql.Observation()
-    val nodes = break(graph.select(col("src_host").as("host"))
-      .union(graph.select(col("dst_host").as("host")))
-      .distinct()
-      .observe(obsN, count(lit(1)).as("rows")))
+    val (nodes, nodeStats) = Materialize.observed(
+      graph.select(col("src_host").as("host"))
+        .union(graph.select(col("dst_host").as("host")))
+        .distinct(),
+      count(lit(1)).as("rows"))
     // outdeg is a STATIC per-source property — fold it into the edge
     // materialization ONCE instead of re-aggregating + re-joining it
     // inside every iteration (guide §1.2/§2.4: don't recompute
@@ -1658,8 +1647,8 @@ object Archives {
     // the reliable-checkpoint path, through execution)
     val outdeg = graph.groupBy("src_host")
       .agg(sum(col("n_links")).as("outdeg"))
-    val edges = break(graph.join(outdeg, Seq("src_host"))
-      .observe(obsE, count(lit(1)).as("rows")))
+    val (edges, edgeStats) = Materialize.observed(
+      graph.join(outdeg, Seq("src_host")), count(lit(1)).as("rows"))
     // small-state mode (r22, LoopExec): with the graph measured tiny,
     // each in-loop break executes AQE-off on one reduce partition —
     // one job per break instead of per-exchange query-stage jobs
@@ -1667,9 +1656,9 @@ object Archives {
     // keep the full AQE path.
     val spark = graph.sparkSession
     val small = LoopExec.isSmall(spark,
-      Some(obsN.get("rows").asInstanceOf[Long]),
-      Some(obsE.get("rows").asInstanceOf[Long]))
+      Some(nodeStats.getAs[Long]("rows")), Some(edgeStats.getAs[Long]("rows")))
     var ranks = nodes.withColumn("rank", lit(scale))
+    var lastBreak: Option[DataFrame] = None
     for (i <- 0 until iterations) {
       // per-iteration shape (r21, guide §2.4): ONE edge join + ONE
       // aggregation. The old `nodes ⟕ contrib` join (which only
@@ -1699,8 +1688,11 @@ object Archives {
       // join/agg chain plans trivially, and each eager checkpoint is
       // a full materialization — per-round checkpointing dominated
       // the query's cost at small scale and wastes memory at large
-      if (i % 3 == 2 && i != iterations - 1)
-        ranks = LoopExec.round(spark, small) { break(ranks) }
+      if (i % 3 == 2 && i != iterations - 1) {
+        ranks = LoopExec.round(spark, small) { Materialize(ranks) }
+        lastBreak.foreach(Materialize.release) // superseded by `ranks`
+        lastBreak = Some(ranks)
+      }
     }
     ranks
   }

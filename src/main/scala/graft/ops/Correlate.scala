@@ -202,8 +202,8 @@ object Correlate {
    * the (monotonically SHRINKING) reached-set keyed by `key`, plus a
    * min-aggregate — k·2 keyed shuffles total, no windows over the full
    * stream, no per-key materialisation; AQE broadcasts the reached
-   * side as it shrinks. Each stage is localCheckpoint-ed because it
-   * feeds both the next stage's join and its own count.
+   * side as it shrinks. Each stage is materialised ([[Materialize]])
+   * because it feeds both the next stage's join and its own count.
    */
   def funnel(
       events: DataFrame,
@@ -233,8 +233,8 @@ object Correlate {
   }
 
   /** Per-step reached-set frames (key, t = earliest completion), each
-   * localCheckpoint-ed because it feeds both the next stage's join and
-   * the final count. */
+   * materialised ([[Materialize]]) because it feeds both the next
+   * stage's join and the final count. */
   private def funnelStages(events: DataFrame, steps: Seq[String],
       maxGapSeconds: Seq[Long], key: String, tsCol: String): Seq[DataFrame] = {
     require(steps.nonEmpty, "funnel needs at least one step")
@@ -253,8 +253,8 @@ object Correlate {
         if (i > 0 && maxGapSeconds.nonEmpty)
           col(tsCol) <= col("t") + expr(s"INTERVAL ${maxGapSeconds(i - 1)} SECOND")
         else lit(true)
-      reached =
-        (if (i == 0)
+      reached = Materialize(
+        if (i == 0)
           events.filter(col(key).isNotNull && col("event_type") === s)
             .groupBy(col(key)).agg(min(col(tsCol)).as("t"))
         else
@@ -262,7 +262,6 @@ object Correlate {
             .join(reached, Seq(key))
             .filter(after && within)
             .groupBy(col(key)).agg(min(col(tsCol)).as("t")))
-          .localCheckpoint()
       reached
     }
   }

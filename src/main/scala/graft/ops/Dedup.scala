@@ -186,8 +186,8 @@ object Dedup {
       threshold: Double = 0.5,
       portableHash: Boolean = true): DataFrame =
     minhashLshIncrementalSig(newDocs,
-      signatureTable(indexDocs, shingleSize, bands * rowsPerBand, portableHash)
-        .localCheckpoint(), // computed once for both the band join and the verify
+      Materialize(signatureTable(indexDocs, shingleSize, bands * rowsPerBand,
+        portableHash)), // computed once for both the band join and the verify
       shingleSize, bands, rowsPerBand, threshold, portableHash)
 
   /** [[minhashLshIncremental]] over a PRECOMPUTED index
@@ -204,8 +204,8 @@ object Dedup {
       rowsPerBand: Int = 2,
       threshold: Double = 0.5,
       portableHash: Boolean = true): DataFrame = {
-    val newBase = signatureTable(newDocs, shingleSize, bands * rowsPerBand, portableHash)
-      .localCheckpoint() // reused by its band side and the verify stage
+    val newBase = Materialize( // reused by its band side and the verify stage
+      signatureTable(newDocs, shingleSize, bands * rowsPerBand, portableHash))
     val a = bandsOf(newBase, bands, rowsPerBand)
       .withColumnRenamed("doc_id", "doc_a")
     val b = bandsOf(indexSignatures, bands, rowsPerBand)
@@ -217,14 +217,14 @@ object Dedup {
   }
 
   /** Shared signature/band computation for the self-join face:
-   * [[signatureTable]] materialised ONCE (localCheckpoint, not cache:
+   * [[signatureTable]] materialised ONCE ([[Materialize]], not cache:
    * no global CacheManager entry to leak across queries — blocks are
    * freed when the query's plan is garbage-collected) because both
    * band-join sides and the verification stage reuse it. */
   private def sigAndBands(documents: DataFrame, shingleSize: Int,
       bands: Int, rowsPerBand: Int, portableHash: Boolean): (DataFrame, DataFrame) = {
-    val docs = signatureTable(documents, shingleSize, bands * rowsPerBand, portableHash)
-      .localCheckpoint()
+    val docs = Materialize(
+      signatureTable(documents, shingleSize, bands * rowsPerBand, portableHash))
     (docs, bandsOf(docs, bands, rowsPerBand))
   }
 
@@ -269,11 +269,10 @@ object Dedup {
    */
   def ngramJaccard(documents: DataFrame, shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
     // materialised once: the posting list feeds both join sides and
-    // the size table (localCheckpoint — see minhashLsh for why not
+    // the size table (Materialize — see minhashLsh for why not
     // cache)
-    val sh = documents.select(
-      col("doc_id"), explode(shingles(col("text"), shingleSize)).as("s"))
-      .localCheckpoint()
+    val sh = Materialize(documents.select(
+      col("doc_id"), explode(shingles(col("text"), shingleSize)).as("s")))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     // prefix filter (exact): a shingle held by ONE document can never
     // witness a pair, and most shingles are unique — restricting the
@@ -318,51 +317,36 @@ object Dedup {
    * the propagation distance per round → O(log diameter) rounds.
    * Convergence is detected exactly (no label changed), so the result
    * equals the transitive closure at any component diameter.
-   * Lineage is truncated each round: `localCheckpoint` by default
-   * (single-JVM mode), reliable `checkpoint()` when
-   * `spark.graft.cc.checkpointDir` is set (cluster mode — an executor
-   * loss mid-fixpoint recovers from the store; see the knob comment
-   * in the body). Small measured states execute one-job-per-round
-   * (LoopExec).
+   * Lineage is truncated each round through [[Materialize]] (a
+   * reliable checkpoint when the context has a checkpoint directory,
+   * so an executor loss mid-fixpoint recovers from the store), and
+   * each superseded round is released. Small measured states execute
+   * one-job-per-round (LoopExec).
    */
   def duplicateClusters(pairs: DataFrame, maxIterations: Int = 50): DataFrame = {
     val spark = pairs.sparkSession
-    // Reliable-checkpoint knob (r22, mirrors hostRank's checkpointDir
-    // option and spark.graft.similarity.reliableMaterialize): with
-    // `spark.graft.cc.checkpointDir` set — the CLUSTER mode — every
-    // lineage break below is a reliable `checkpoint()` into that
-    // directory, so a lost executor mid-fixpoint recovers from the
-    // store instead of killing the job (localCheckpoint blocks are
-    // executor-local AND lineage-severed: unrecoverable). Unset — the
-    // single-JVM default — localCheckpoint stays the right trade.
-    val ckDir = spark.conf.getOption("spark.graft.cc.checkpointDir")
-    ckDir.foreach(d => spark.sparkContext.setCheckpointDir(d))
-    def break(df: DataFrame): DataFrame = ckDir match {
-      case Some(_) => df.checkpoint()
-      case None    => df.localCheckpoint()
-    }
     // materialise the (possibly expensive) pair-detection lineage ONCE
     // — the checkpoint also truncates the logical plan so the per-round
     // re-planning below never re-optimizes the pair finder's tree.
     // The pair count rides the same job as an observe metric and
     // (×2 = edge rows) feeds the small-round gate below.
-    val obsP = org.apache.spark.sql.Observation()
-    val p = break(pairs.select(col("doc_a"), col("doc_b"))
-      .observe(obsP, count(lit(1)).as("rows")))
-    val nEdges = 2L * obsP.get("rows").asInstanceOf[Long]
+    val (p, pStats) = Materialize.observed(
+      pairs.select(col("doc_a"), col("doc_b")), count(lit(1)).as("rows"))
+    val nEdges = 2L * pStats.getAs[Long]("rows")
     // undirected edge list, both directions in ONE map-side explode,
     // PERSISTED lazily instead of eagerly checkpointed: the first
     // round's init aggregation materializes it as part of its own job,
     // so the r20 shape's dedicated edges-checkpoint job disappears
     // (edges is a flat projection over the checkpointed pairs — no
     // round-over-round lineage growth, unlike the label chain below).
-    // Released before returning: the returned labels are checkpointed
-    // and never re-read it. (A dst-hash repartition here — to spare
-    // the per-round join its edges exchange — measured as a pure LOSS
-    // at bench scale: AQE broadcasts the small label side, so the
-    // exchange it would save never exists, while the repartition
-    // itself adds a full AQE query stage; at cluster scale the
-    // equivalent is bucketing the edge list on storage.)
+    // Released with the pairs break before returning: the returned
+    // labels are checkpointed and never re-read either. (A dst-hash
+    // repartition here — to spare the per-round join its edges
+    // exchange — measured as a pure LOSS at bench scale: AQE
+    // broadcasts the small label side, so the exchange it would save
+    // never exists, while the repartition itself adds a full AQE
+    // query stage; at cluster scale the equivalent is bucketing the
+    // edge list on storage.)
     val edges = p
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
@@ -374,25 +358,16 @@ object Dedup {
     // label sum strictly decreases until the fixpoint — comparing sums
     // is one cheap scan per round instead of a join of old vs new.
     // DECIMAL(38,0) so the sum cannot overflow at any corpus size.
-    // Each round is an EAGER localCheckpoint (severs the LOGICAL plan
+    // Each round is an EAGER checkpoint (severs the LOGICAL plan
     // — a lazily-persisted round chain keeps the full lineage tree,
     // which the self-join rounds grow EXPONENTIALLY round over round:
     // measured OOM in treeString at d9's round count). The convergence
     // sum rides the SAME job as an `observe` metric (r21, guide §1.2:
     // the per-round wall cost here is job-launch overhead, not task
     // time — 68 tasks / 2.0 s task time inside 4.5 s wall at q_d9):
-    // Dataset.checkpoint is a tracked action, so the CollectMetrics
-    // accumulator publishes when the checkpoint job finishes and the
-    // dedicated per-round sum job disappears (2 jobs/round → 1).
-    def materializeWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = df
-        .observe(obs, sum(col("cluster").cast("decimal(38,0)")).as("s"),
-          count(lit(1)).as("rows")) // label count for the small-round gate
-      val broken = break(out)
-      (broken, obs.get("s").asInstanceOf[java.math.BigDecimal],
-        obs.get("rows").asInstanceOf[Long])
-    }
+    // the dedicated per-round sum job disappears (2 jobs/round → 1).
+    val labelMetrics = Seq(sum(col("cluster").cast("decimal(38,0)")).as("s"),
+      count(lit(1)).as("rows")) // label count for the small-round gate
     // init = min(self, min neighbor): the first min-step fused into the
     // label-table build (one aggregation replaces distinct + round 1's
     // neighbor join), saving a full round; the init sum's NULL doubles
@@ -407,16 +382,20 @@ object Dedup {
     // jobs. Gate includes nEdges: a small label table joined against
     // a huge static edge list must keep the AQE path (runtime
     // broadcast, skew splitting).
-    val (labels0, sum0, nLabels0) = LoopExec.round(spark,
+    val (labels0, stats0) = LoopExec.round(spark,
       LoopExec.isSmall(spark, Some(nEdges))) {
-      materializeWithSum(
+      Materialize.observed(
         edges.groupBy(col("src").as("doc_id"))
-          .agg(least(min(col("dst")), col("src")).as("cluster")))
+          .agg(least(min(col("dst")), col("src")).as("cluster")), labelMetrics: _*)
     }
     var labels = labels0
-    if (sum0 == null) { edges.unpersist(blocking = false); return labels }
-    var prevSum = sum0
-    var nLabels = nLabels0
+    var prevSum = stats0.getAs[java.math.BigDecimal]("s")
+    var nLabels = stats0.getAs[Long]("rows")
+    def releaseInputs(): Unit = {
+      edges.unpersist(blocking = false)
+      Materialize.release(p)
+    }
+    if (prevSum == null) { releaseInputs(); return labels }
     var converged = false
     var iter = 0
     while (!converged && iter < maxIterations) {
@@ -473,16 +452,18 @@ object Dedup {
         .select(col("doc_id"),
           coalesce(col("pj_cluster"), col("cluster")).as("cluster"))
       LoopProbe.tap(s"round${iter + 1}", next)
-      val (nextM, curSum, curRows) = LoopExec.round(spark, small) {
-        materializeWithSum(next)
+      val (nextM, stats) = LoopExec.round(spark, small) {
+        Materialize.observed(next, labelMetrics: _*)
       }
+      val curSum = stats.getAs[java.math.BigDecimal]("s")
       converged = curSum.compareTo(prevSum) == 0
       prevSum = curSum
-      nLabels = curRows
+      nLabels = stats.getAs[Long]("rows")
+      Materialize.release(labels) // superseded: nextM no longer reads it
       labels = nextM
       iter += 1
     }
-    edges.unpersist(blocking = false)
+    releaseInputs()
     labels
   }
 
@@ -533,9 +514,9 @@ object Dedup {
     val bitsPerBand = SimhashBits / bands
     val mask = (1L << bitsPerBand) - 1
     // materialised once: both sides of the band self-join reuse the
-    // 60-sum fingerprint aggregation (localCheckpoint — see
+    // 60-sum fingerprint aggregation (Materialize — see
     // minhashLsh for why not cache)
-    val hs = simhash(documents).localCheckpoint()
+    val hs = Materialize(simhash(documents))
     // the fingerprint is one long — cheap to carry through the band join
     // (unlike minhashLsh, where the shingle arrays must stay behind)
     val banded = hs.select(

@@ -177,8 +177,8 @@ object Ingest {
         // the whole batch's signatures, computed ONCE: index probe +
         // both verify sides + the within-batch pair finder + the
         // admitted signature append all derive from this table
-        val batchSig = Dedup.signatureTable(batch, shingleSize, bands * rowsPerBand)
-          .localCheckpoint()
+        val batchSig = Materialize(
+          Dedup.signatureTable(batch, shingleSize, bands * rowsPerBand))
         // index probe against the bucketed band/sig tables, pruned to
         // what THIS batch can match
         def probeSurvivors(): DataFrame = {
@@ -190,8 +190,8 @@ object Ingest {
           // parquet OR-chain overflows the stack, the catalyst tree
           // bloats the driver) and relies on the bucketed join, which
           // still never shuffles the index side
-          val batchHashes = Dedup.bandsOf(batchSig, bands, rowsPerBand)
-            .select("band_hash").distinct().localCheckpoint()
+          val batchHashes = Materialize(Dedup.bandsOf(batchSig, bands, rowsPerBand)
+            .select("band_hash").distinct())
           val nHashes = batchHashes.count()
           val probeHashes =
             if (nHashes > 0 && nHashes <= MaxProbeLiterals)
@@ -199,12 +199,12 @@ object Ingest {
             else None
           val idxBands = indexBandProbe(spark, indexDir, writeId, probeHashes, indexBuckets)
             .select(col("band_idx"), col("band_hash"), col("doc_id").as("doc_b"))
-          val cand = Dedup.bandsOf(batchSig, bands, rowsPerBand)
+          // reused: candidate-id collect + verify
+          val cand = Materialize(Dedup.bandsOf(batchSig, bands, rowsPerBand)
             .withColumnRenamed("doc_id", "doc_a")
             .join(idxBands, Seq("band_idx", "band_hash"))
             .select("doc_a", "doc_b")
-            .dropDuplicates("doc_a", "doc_b")
-            .localCheckpoint() // reused: candidate-id collect + verify
+            .dropDuplicates("doc_a", "doc_b"))
           // candidate index docs, same literal budget: verify only
           // needs the signatures of docs some band actually matched
           val nCand = cand.count()
@@ -225,9 +225,8 @@ object Ingest {
           else probeSurvivors()
         // within-batch canonical selection among index-survivors, pairs
         // derived from the SAME signature table (no re-shingling)
-        val survivorsSig = batchSig
-          .join(survivorIds, Seq("doc_id"), "left_semi")
-          .localCheckpoint() // feeds pair finding, verify, and the index append
+        val survivorsSig = Materialize( // feeds pair finding, verify, and the index append
+          batchSig.join(survivorIds, Seq("doc_id"), "left_semi"))
         val sa = Dedup.bandsOf(survivorsSig, bands, rowsPerBand)
           .withColumnRenamed("doc_id", "doc_a")
         val sb = sa.select(col("band_idx"), col("band_hash"), col("doc_a").as("doc_b"))
@@ -236,13 +235,11 @@ object Ingest {
             .filter(col("doc_a") < col("doc_b"))
             .select("doc_a", "doc_b").dropDuplicates("doc_a", "doc_b"),
           survivorsSig, survivorsSig, threshold)
-        val admitted = Dedup.applyNearDedup(
-          batch.join(survivorIds, Seq("doc_id"), "left_semi"), withinPairs)
-          .localCheckpoint()
+        val admitted = Materialize(Dedup.applyNearDedup(
+          batch.join(survivorIds, Seq("doc_id"), "left_semi"), withinPairs))
         if (!admitted.isEmpty) {
-          val admittedSig = survivorsSig
-            .join(admitted.select("doc_id"), Seq("doc_id"), "left_semi")
-            .localCheckpoint() // two writes below; severs the index-table read
+          val admittedSig = Materialize( // two writes below; severs the index-table read
+            survivorsSig.join(admitted.select("doc_id"), Seq("doc_id"), "left_semi"))
           admitted.write.mode("overwrite").parquet(s"$outDir/write_id=$writeId")
           appendIndexPartition(admittedSig,
             sigTableName(indexDir), sigDir, "doc_id", indexBuckets, writeId)

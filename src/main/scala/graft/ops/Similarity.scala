@@ -112,7 +112,7 @@ object Similarity {
    */
   def embeddingNearDupLsh(embeddings: DataFrame, threshold: Double = 0.4,
       nPlanes: Int = 8, dim: Int = 64): DataFrame = {
-    val bucketed = lshBuckets(embeddings, nPlanes, dim).localCheckpoint()
+    val bucketed = Materialize(lshBuckets(embeddings, nPlanes, dim))
     val flips: Seq[Long] = // Hamming-1 and Hamming-2 XOR masks
       (0 until nPlanes).map(i => 1L << i) ++
         (for { i <- 0 until nPlanes; j <- i + 1 until nPlanes }
@@ -219,10 +219,9 @@ object Similarity {
       trainFraction: Double = 1.0): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    val corpus = embeddings.select(
+    val corpus = Materialize(embeddings.select( // trained over + assigned + probed below
       col("vec_id"), normalized(asDouble(col("embedding"))).as("v"))
-      .withColumn("features", array_to_vector(col("v")))
-      .localCheckpoint() // trained over + assigned + probed below
+      .withColumn("features", array_to_vector(col("v"))))
     // k-means on a sampled fraction is the standard billion-scale IVF
     // training regime (coarse centroids need only the distribution's
     // shape); pass < 1.0 at scale — the default keeps the small-corpus
@@ -286,8 +285,7 @@ object Similarity {
   def ivfFixedTopK(embeddings: DataFrame, nQueries: Int = 20, k: Int = 10,
       nLists: Int = 16, nProbe: Int = 4): DataFrame =
     ivfFixedTopKOn(
-      unitCorpus(embeddings)
-        .localCheckpoint(), // assignment + query side + probe scoring reuse it
+      Materialize(unitCorpus(embeddings)), // assignment + query side + probe scoring reuse it
       nQueries, k, nLists, nProbe)
 
   /** [[ivfFixedTopK]] over a pre-normalised, already-materialised
@@ -441,13 +439,13 @@ object Similarity {
       .select(col("vec_id").as("seed_id"), col("v").as("cv"))
     val qs = queries.select(
       col("vec_id").as("query_id"), normalized(asDouble(col("embedding"))).as("qv"))
-    val probeCells = qs.join(broadcast(cents))
+    // materialised: collected for the partition filter AND joined
+    val probeCells = Materialize(qs.join(broadcast(cents))
       .withColumn("cdot", round(dot(col("qv"), col("cv")), 6))
       .withColumn("crank", row_number().over(
         Window.partitionBy("query_id").orderBy(col("cdot").desc, col("seed_id"))))
       .filter(col("crank") <= nProbe)
-      .select(col("query_id"), col("qv"), col("seed_id").as("cell"))
-      .localCheckpoint() // collected for the partition filter AND joined
+      .select(col("query_id"), col("qv"), col("seed_id").as("cell")))
     // bounded driver collect (nQueries·nProbe cell ids) — the literal
     // list is what the planner prunes index partitions with
     val cells = probeCells.select("cell").distinct()
@@ -570,8 +568,7 @@ object Similarity {
   def pqTopK(embeddings: DataFrame, nQueries: Int = 20, k: Int = 10,
       m: Int = 8, ks: Int = 16, dim: Int = 64, rerank: Int = 40): DataFrame =
     pqTopKOn(
-      unitCorpus(embeddings)
-        .localCheckpoint(), // encoded below + query side + (tiny) codebook
+      Materialize(unitCorpus(embeddings)), // encoded below + query side + (tiny) codebook
       nQueries, k, m, ks, dim, rerank)
 
   /** [[pqTopK]] over a pre-normalised, already-materialised corpus
@@ -652,14 +649,14 @@ object Similarity {
     // materialised once: the bucketed corpus feeds both the query side
     // and the probe join — without it the scan + normalize + bucket
     // pass runs twice (at 100 TB you would write the bucketed corpus
-    // to storage; localCheckpoint avoids a leaked CacheManager entry)
+    // to storage; a checkpoint avoids a leaked CacheManager entry)
     // nPlanes is forwarded (r22, ADVICE): probe generation must flip
     // every plane the buckets were built with — without it a caller
     // using nPlanes != 4 silently lost the Hamming-1 probes for planes
     // 4..n and the documented nPlanes+1-probes contract. The declared
     // query (q_s2) uses the default nPlanes = 4, where forwarding is
     // the identity — its result is byte-identical.
-    lshTopKOn(lshBuckets(embeddings, nPlanes, dim).localCheckpoint(),
+    lshTopKOn(Materialize(lshBuckets(embeddings, nPlanes, dim)),
       nQueries, k, nPlanes)
 
   /** [[lshTopK]] over a pre-bucketed, already-materialised
@@ -732,11 +729,13 @@ object Similarity {
    * Output: (method, query_id, hits, recall), hits = |approx ∩ exact|.
    *
    * Lifetime: the returned frame lazily reads ONE materialised corpus
-   * (localCheckpoint by default), which lives until the caller's
-   * action completes and the session sweeps (`clearCache()` + an
-   * unpersist pass, as Bench/Verify do between queries) or the
-   * ContextCleaner collects it — a long-lived session looping this
-   * MUST sweep, or it accumulates one persisted corpus per call.
+   * (a [[Materialize]] break, so it cannot be released before the
+   * caller evaluates it), which lives until the caller's action
+   * completes and the session sweeps (`clearCache()` + an unpersist
+   * pass, as Bench/Verify do between queries) or the ContextCleaner
+   * collects it — a long-lived session looping this MUST sweep, or it
+   * accumulates one persisted corpus per call. [[kmeansCentroids]]
+   * returns a collected Seq and releases its corpus itself.
    */
   def recallAtK(embeddings: DataFrame, nQueries: Int = 20, k: Int = 10): DataFrame = {
     // ONE materialisation of the normalised corpus feeds all SIX index
@@ -746,10 +745,10 @@ object Similarity {
     // public face computes exactly unitCorpus(embeddings), and the LSH
     // bucket column is the same map-side expression lshBuckets applies
     // (recomputed from the materialised corpus instead of a second
-    // checkpoint — 8 pinned dot products per row). Release thunk
-    // dropped as in ivfTrainedTopK: the returned frame lazily reads
-    // the corpus; callers sweep after their action.
-    val (corpus, _) = materialize(unitCorpus(embeddings))
+    // checkpoint — 8 pinned dot products per row). Not released, as
+    // in ivfTrainedTopK: the returned frame lazily reads the corpus;
+    // callers sweep after their action.
+    val corpus = Materialize(unitCorpus(embeddings))
     val exact = bruteForceTopKOn(corpus, nQueries, k)
       .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
     val approx = Seq(
@@ -815,9 +814,9 @@ object Similarity {
     // share ONE materialised corpus between training and the final
     // assignment (r21: the assignment previously re-scanned +
     // re-normalised the source after kmeansCentroids released its own
-    // copy). Release thunk dropped — the returned frame lazily reads
-    // the corpus (see materialize's Lifetime note).
-    val (corpus, _) = materialize(unitCorpus(embeddings))
+    // copy). Not released — the returned frame lazily reads the
+    // corpus (see the Lifetime note).
+    val corpus = Materialize(unitCorpus(embeddings))
     assignToCentroids(corpus, kmeansCentroidsOn(corpus, k, iters))
       .select(col("vec_id"), col("cluster"), col("sim"))
   }
@@ -855,52 +854,10 @@ object Similarity {
     // result is a collected Seq, so the materialisation is released
     // here — a long-lived session calling this in a loop must not
     // accumulate a cached corpus per call.
-    val (corpus, release) = materialize(unitCorpus(embeddings))
+    val corpus = Materialize(unitCorpus(embeddings))
     try kmeansCentroidsOn(corpus, k, iters)
-    finally release()
+    finally Materialize.release(corpus)
   }
-
-  /** Materialise an already-normalised corpus for reuse across
-   * training iterations / search stages. Default is `localCheckpoint`
-   * — executor-local and lineage-severing, the right trade at
-   * local[32] where an executor loss is impossible. At CLUSTER scale
-   * an executor loss kills a lineage-severed query, so set
-   * `spark.graft.similarity.reliableMaterialize=true` to use a
-   * recomputable MEMORY_AND_DISK persist instead (the corpus scan is
-   * linear — recompute-on-loss is the 100x-safe form).
-   *
-   * Lifetime: [[kmeansCentroids]] releases its materialisation in a
-   * `finally` (its result is a collected Seq). [[ivfTrainedTopK]]
-   * CANNOT — its returned DataFrame lazily reads the materialised
-   * corpus, so releasing before the caller evaluates would defeat the
-   * sharing. Its one copy lives until the caller's action completes
-   * and the ContextCleaner collects it (or `spark.catalog
-   * .clearCache()` / an unpersist sweep, as Bench/Verify do between
-   * queries); a long-lived session looping ivfTrainedTopK should
-   * sweep likewise.
-   *
-   * Returns the materialised frame AND a release thunk: `Dataset
-   * .unpersist` only clears CacheManager entries, so on the
-   * localCheckpoint path (whose persistence lives on the underlying
-   * RDD) the thunk digs the checkpointed RDD out of the `LogicalRDD`
-   * plan node and unpersists it directly — without this the default
-   * path leaked one persisted RDD per call until driver GC. */
-  private def materialize(df: DataFrame): (DataFrame, () => Unit) =
-    if (df.sparkSession.conf
-        .getOption("spark.graft.similarity.reliableMaterialize")
-        .contains("true")) {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (p, () => { p.unpersist(blocking = false); () })
-    } else {
-      val out = df.localCheckpoint()
-      val release = out.queryExecution.analyzed
-        .collectFirst {
-          case lr: org.apache.spark.sql.execution.LogicalRDD =>
-            () => { lr.rdd.unpersist(blocking = false); () }
-        }
-        .getOrElse(() => ())
-      (out, release)
-    }
 
   /** [[kmeansCentroids]] over a corpus that is ALREADY normalised and
    * materialised — so a caller that needs the corpus for its own
@@ -954,6 +911,10 @@ object Similarity {
    * probe list rides a sort_array over k structs); scoring joins the
    * broadcast (query, cell) pairs against the assigned corpus — the
    * corpus shuffles ONCE on the rank window, nothing else.
+   *
+   * Lifetime: like [[recallAtK]], the returned frame lazily reads one
+   * materialised corpus — a long-lived session looping this must
+   * sweep after each action.
    */
   def ivfTrainedTopK(embeddings: DataFrame, nQueries: Int = 20, k: Int = 10,
       nLists: Int = 8, iters: Int = 2, nProbe: Int = 2): DataFrame = {
@@ -962,10 +923,9 @@ object Similarity {
     // The values are the single-normalisation arithmetic the oracle
     // replays — kmeansCentroidsOn never re-normalises its input (doing
     // so would perturb already-unit vectors at the float ulp under the
-    // round-9 pin). The release thunk is deliberately dropped: the
-    // returned DataFrame lazily reads this corpus (see materialize's
-    // Lifetime note) — callers sweep after their action completes.
-    val (corpus, _) = materialize(unitCorpus(embeddings))
+    // round-9 pin). Deliberately not released: the returned DataFrame
+    // lazily reads this corpus (see the Lifetime note).
+    val corpus = Materialize(unitCorpus(embeddings))
     ivfTrainedTopKOn(corpus, nQueries, k, nLists, iters, nProbe)
   }
 

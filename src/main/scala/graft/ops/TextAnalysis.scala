@@ -251,13 +251,12 @@ object TextAnalysis {
     // checkpoint the explode lineage executes three times per action
     // (the round-2 q_x9 pathology). At 100 TB this is the bigram
     // posting table you'd write to storage before scoring.
-    val bg = documents.select(
+    val bg = Materialize(documents.select(
       col("doc_id"),
       explode(grams).as("g"))
       .select(col("doc_id"),
         substring_index(col("g"), " ", 1).as("prev"),
-        substring_index(col("g"), " ", -1).as("w"))
-      .localCheckpoint()
+        substring_index(col("g"), " ", -1).as("w")))
     val bigramCounts = bg.groupBy("prev", "w").agg(count(lit(1)).as("bc"))
     val contextCounts = bigramCounts.groupBy("prev").agg(sum("bc").as("cc"))
     bg
@@ -324,7 +323,7 @@ object TextAnalysis {
    */
   def copyPairs(documents: DataFrame, k: Int = 3, w: Int = 4,
       minShared: Int = 3, maxDf: Int = 20): DataFrame = {
-    val fps = winnow(documents, k, w).localCheckpoint() // feeds pruning, pairs, and sizes
+    val fps = Materialize(winnow(documents, k, w)) // feeds pruning, pairs, and sizes
     val keep = fps.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select("fp")
     val pruned = fps.join(keep, "fp")
@@ -392,11 +391,10 @@ object TextAnalysis {
     // checkpoint the corpus explode would run four times). No driver
     // action: the scalar total is folded into the plan as a broadcast
     // cross join, like unigramLogProb.
-    val bc = documents.select(explode(pairs).as("g"))
+    val bc = Materialize(documents.select(explode(pairs).as("g"))
       .select(substring_index(col("g"), " ", 1).as("prev"),
         substring_index(col("g"), " ", -1).as("w"))
-      .groupBy("prev", "w").agg(count(lit(1)).as("c_xy"))
-      .localCheckpoint()
+      .groupBy("prev", "w").agg(count(lit(1)).as("c_xy")))
     val left = bc.groupBy("prev").agg(sum("c_xy").as("c_x"))
     val right = bc.groupBy("w").agg(sum("c_xy").as("c_y"))
     val total = bc.agg(sum("c_xy").cast("double").as("n_total"))
@@ -621,7 +619,7 @@ object TextAnalysis {
     // O(words with the pair), not O(vocabulary) -- at a real vocab
     // the difference between O(touched) and O(vocab·word-length).
     //
-    // Execution shape: ONE eager localCheckpoint job per round. The
+    // Execution shape: ONE eager checkpoint job per round. The
     // checkpoint both truncates the lineage (pc_r references cur's
     // replace chain AND pc_{r-1}; left lazy, the shared subtrees
     // re-enter through two paths and the logical tree DOUBLES per
@@ -631,20 +629,17 @@ object TextAnalysis {
     // orderBy(n desc, a, b).limit(1) -- long negation flips the count
     // order, struct comparison is field-by-field with the same
     // binary string ordering orderBy uses -- so the dedicated
-    // per-round TakeOrdered job disappears (2 jobs/round → 1).
+    // per-round TakeOrdered job disappears (2 jobs/round → 1). Each
+    // superseded `pc` is released as soon as its successor exists.
     var cur = bpeBase(documents).persist()
     val states = scala.collection.mutable.ArrayBuffer(cur)
     def materializeWithBest(df: DataFrame): (DataFrame, Option[(String, String, Long)], Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = df.observe(obs,
+      val (out, m) = Materialize.observed(df,
         min(struct((-col("n")).as("nn"), col("a"), col("b"))).as("best"),
         count(lit(1)).as("rows")) // feeds the small-round gate, same job
-        .localCheckpoint()
-      val best = Option(obs.get("best")).map { anyRow =>
-        val row = anyRow.asInstanceOf[org.apache.spark.sql.Row]
-        (row.getString(1), row.getString(2), -row.getLong(0))
-      }
-      (out, best, obs.get("rows").asInstanceOf[Long])
+      val best = Option(m.getAs[org.apache.spark.sql.Row]("best"))
+        .map(row => (row.getString(1), row.getString(2), -row.getLong(0)))
+      (out, best, m.getAs[Long]("rows"))
     }
     var (pc, best, pcRows) = materializeWithBest(bpePairCounts(cur))
     val merges = Seq.newBuilder[(Int, String, String, Long)]
@@ -684,12 +679,14 @@ object TextAnalysis {
           LoopExec.round(spark, LoopExec.isSmall(spark, Some(pcRows))) {
             materializeWithBest(next)
           }
+        Materialize.release(pc)
         pc = pcM
         best = bestM
         pcRows = rowsM
       }
       r += 1
     }
+    Materialize.release(pc)
     states.foreach(_.unpersist())
     merges.result().toDF("merge_round", "pair_left", "pair_right", "n")
   }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.model.Event
+import graft.ops.Materialize
 import graft.rules.RuleSpec
 
 /**
@@ -202,12 +203,11 @@ object Sinks {
    * `erroredActionCommands`; src/Scheduler.php:840-884). Returns the
    * number of rows dead-lettered. */
   def appendDeadLetter(results: Dataset[ActionResult], baseDir: String): Long = {
-    // localCheckpoint: materialise exactly once — the count and the
-    // write must not re-run the side-effecting handler map upstream
-    val failed = results.filter(!_.ok).toDF()
+    // materialise exactly once — the count and the write must not
+    // re-run the side-effecting handler map upstream
+    val failed = Materialize(results.filter(!_.ok).toDF()
       .select(col("rule"), col("key"), col("name"), col("vars"), col("error"))
-      .withColumn("attempts", lit(1))
-      .localCheckpoint()
+      .withColumn("attempts", lit(1)))
     val n = failed.count()
     if (n > 0) failed.write.mode("append").parquet(s"$baseDir/dead_letter")
     n
@@ -257,14 +257,14 @@ object Sinks {
     // explicit schema (not inference) so a footer-less directory reads
     // as empty, and Try so an unreadable/corrupt queue degrades to
     // "nothing to replay" instead of crashing startup
-    val dl = Try(spark.read.schema(deadLetterSchema).parquet(dir)
+    val dl = Try(Materialize(spark.read.schema(deadLetterSchema).parquet(dir)
       .select(col("rule"), col("key"), col("name"), col("vars"),
-        col("error"), col("attempts"))
-      .localCheckpoint()) match {
+        col("error"), col("attempts")))) match {
       case Success(df) => df
       case Failure(_) => return RecoveryReport(0L, 0L, 0L, 0L)
     }
-    val results = dl.filter(col("attempts") < maxAttempts)
+    // one replay per action: count/write below re-read blocks, not the handler map
+    val results = Materialize(dl.filter(col("attempts") < maxAttempts)
       .as[(String, String, String, Map[String, String], String, Int)]
       .map { case (rule, key, name, vars, _, attempts) =>
         Try(handler(name, vars)) match {
@@ -273,8 +273,7 @@ object Sinks {
             String.valueOf(e.getMessage), attempts + 1, false)
         }
       }
-      .toDF("rule", "key", "name", "vars", "error", "attempts", "ok")
-      .localCheckpoint() // one replay per action: count/write below re-read blocks, not the handler map
+      .toDF("rule", "key", "name", "vars", "error", "attempts", "ok"))
     val requeued = results.filter(!col("ok")).drop("ok")
     val exhausted = dl.filter(col("attempts") >= maxAttempts)
     val report = RecoveryReport(
@@ -380,7 +379,7 @@ object Sinks {
     // materialise the (small) combined fire records once, then release
     // the per-pass caches — repeated batch invocations must not
     // accumulate persisted frames in a long-lived driver
-    val out = all.localCheckpoint()
+    val out = Materialize(all)
     persisted.foreach { df => df.unpersist(); () }
     out
   }

@@ -153,25 +153,35 @@ class DedupSpec extends SparkSpec {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
-  test("duplicate clusters: reliable-checkpoint knob and forced-AQE path " +
-      "both reproduce the default result (r22)") {
+  test("reliable-checkpoint policy and forced-AQE path reproduce the default result") {
     import spark.implicits._
+    import MaterializeSpec._
     // a long chain (many rounds) + an isolated pair
-    val pairs = (1L until 9L).map(i => (i, i + 1)).toSeq ++ Seq((20L, 21L))
-    val df = pairs.toDF("doc_a", "doc_b")
+    val df = chainPairs(spark)
     val expect = Dedup.duplicateClusters(df).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster")).toMap
     assert(expect.values.toSet == Set(1L, 20L))
-    // 1. reliable checkpoint() into a temp dir (the cluster mode)
-    val dir = java.nio.file.Files.createTempDirectory("cc-ck").toString
-    spark.conf.set("spark.graft.cc.checkpointDir", dir)
-    try {
-      val got = Dedup.duplicateClusters(df).collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster")).toMap
-      assert(got == expect)
-      // the reliable path actually wrote checkpoint state
-      assert(new java.io.File(dir).listFiles().nonEmpty)
-    } finally spark.conf.unset("spark.graft.cc.checkpointDir")
+    // 1. a checkpoint directory on the context (what Spark's own
+    // spark.checkpoint.dir sets on a cluster) turns every Materialize
+    // break into a reliable checkpoint: each loop/corpus operator must
+    // give its default-path result and leave rows in the store
+    val runs = Seq[(String, () => Any)](
+      "duplicateClusters" -> (() => Dedup.duplicateClusters(df).collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster")).toMap),
+      "hostRank" -> (() => Archives.hostRank(hostGraph(spark))
+        .as[(String, Long)].collect().toMap),
+      "bpeTrain" -> (() => TextAnalysis.bpeTrain(spark, bpeDocs(spark))
+        .as[(Int, String, String, Long)].collect().toSeq),
+      "kmeansCentroids" -> (() => Similarity.kmeansCentroids(vectors(spark), k = 4)))
+    val default = runs.map { case (name, run) => name -> run() }.toMap
+    val dir = java.nio.file.Files.createTempDirectory("graft-ck")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    try runs.foreach { case (name, run) =>
+      val before = fileCount(dir)
+      assert(run() == default(name), name)
+      assert(fileCount(dir) > before, s"$name wrote no checkpoint files")
+    } finally spark.sparkContext.setCheckpointDir(null) // local mode: clears it
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
     // 2. threshold 0 disables the small-round mode → the full AQE
     // path (the pre-r22 execution) must agree row for row
     spark.conf.set(graft.ops.LoopExec.SmallRowsConf, "0")

@@ -131,10 +131,10 @@ class CheckpointRestartSpec extends SparkSpec {
   }
 
   test("aligned face: rule-list change across restart discards positional state wholesale") {
-    // AlignedState is indexed by declaration order, so a changed rule
-    // list can't be partially restored — the fingerprint mismatch must
-    // drop the whole key's state rather than hand rule B rule A's
-    // matchers. Fresh sequences after the restart still work.
+    // RuleEngine.GroupMatchers is indexed by declaration order, so a
+    // changed rule list can't be partially restored — the fingerprint
+    // mismatch must drop the whole key's state rather than hand rule B
+    // rule A's matchers. Fresh sequences after the restart still work.
     val base = Files.createTempDirectory("ckaligned")
     val inDir = s"$base/in"; val ckDir = s"$base/ck"; val outDir = s"$base/out"
     Files.createDirectories(Paths.get(inDir))
