@@ -3,6 +3,8 @@ package graft.ops
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
 
+import org.apache.hadoop.fs.Path
+
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -35,16 +37,18 @@ object Materialize {
     (out, Await.result(obs.future, Duration.Inf))
   }
 
-  /** Drops the blocks behind a frame [[apply]] returned, once nothing
-   * reads it any more (a superseded loop round, a corpus whose
-   * consumers have run). `Dataset.unpersist` only clears CacheManager
-   * entries, and the local break persists the underlying RDD, so this
-   * digs it out of the `LogicalRDD` plan node — otherwise each break
-   * stays pinned until driver GC. A reliable break holds no blocks;
-   * its files follow Spark's `spark.cleaner.referenceTracking
-   * .cleanCheckpoints`. */
+  /** Drops what a frame [[apply]] returned holds, once nothing reads
+   * it any more (a superseded loop round, a consumed corpus, a routed
+   * batch): the local break's blocks, dug out of the `LogicalRDD` plan
+   * node because `Dataset.unpersist` only clears CacheManager entries,
+   * and the reliable break's files, deleted through the store's Hadoop
+   * filesystem (Spark's `cleanCheckpoints` cleaner is off by default). */
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed
       .collectFirst { case lr: LogicalRDD => lr.rdd }
-      .foreach(_.unpersist(blocking = false))
+      .foreach { rdd =>
+        rdd.unpersist(blocking = false)
+        rdd.getCheckpointFile.map(new Path(_))
+          .foreach(p => p.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(p, true))
+      }
 }

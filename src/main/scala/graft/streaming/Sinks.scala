@@ -23,8 +23,20 @@ import graft.rules.RuleSpec
  * in `dead_letter/` and are replayed first on the next run — the
  * at-least-once contract of the reference's errored-action queue
  * (reference: src/Scheduler.php:840-884).
+ *
+ * Every face routes a batch of fires through ONE body, [[route]],
+ * which reads the batch once. Delivery: table appends are
+ * at-least-once per batch — a micro-batch re-run after a failure or a
+ * restart appends its rows again (exactly-once table writes are not
+ * implemented yet). Actions are at-least-once — the handler runs once
+ * per action row of a routed batch, again if the batch re-runs, and
+ * failures replay from `dead_letter/`, so a handler must be idempotent.
  */
 object Sinks {
+
+  /** Output kind → its table directory under `baseDir`. */
+  private val tables = Seq("action" -> "actions", "memory" -> "memory_writes",
+    "event" -> "events", "source" -> "sources")
 
   /** Explode Fired rows into one row per output. */
   def outputsOf(fired: DataFrame): DataFrame =
@@ -38,47 +50,55 @@ object Sinks {
 
   /** Batch router: split one Fired dataset into the four output tables
    * (append mode). Returns the per-kind row counts. */
-  def routeFiredBatch(fired: DataFrame, baseDir: String): Map[String, Long] = {
-    val outs = outputsOf(fired).cache()
-    try {
-      Seq("action" -> "actions", "memory" -> "memory_writes",
-        "event" -> "events", "source" -> "sources").map { case (kind, dir) =>
-        val part = outs.filter(col("out_kind") === kind)
-        val n = part.count()
-        if (n > 0) part.write.mode("append").parquet(s"$baseDir/$dir")
-        kind -> n
-      }.toMap
-    } finally { outs.unpersist(); () }
-  }
+  def routeFiredBatch(fired: DataFrame, baseDir: String): Map[String, Long] =
+    route(fired, baseDir)
 
   /** Streaming router: the same split per micro-batch via foreachBatch
    * (reference cadence: emissions handled as they occur; here per
    * trigger). */
   def routeFiredStreaming(fired: Dataset[RuleEngine.Fired], baseDir: String,
       checkpoint: String): StreamingQuery =
+    routeStreaming(fired, checkpoint)(route(_, baseDir))
+
+  /** The one routing body, per batch of fires: with `rules`, add the
+   * chained fires ([[chainLoop]]); materialize the exploded outputs
+   * ONCE, the per-kind counts observed on that job; append each
+   * non-empty kind; with a `handler`, run the action rows from the
+   * materialized rows and dead-letter the failures; release what it
+   * materialized. So the upstream plan (a micro-batch with its rule
+   * callbacks) runs once per batch. Returns the per-kind counts. */
+  private def route(fires: DataFrame, baseDir: String,
+      rules: Seq[RuleSpec] = Nil, passes: Int = 3,
+      sourceRegistry: Map[String, (SparkSession, Map[String, String]) => Dataset[Event]] = Map.empty,
+      handler: Option[(String, Map[String, String]) => Unit] = None): Map[String, Long] = {
+    val spark = fires.sparkSession
+    val (all, persisted) =
+      if (rules.isEmpty) (fires, Nil)
+      else chainLoop(spark, fires.persist(), rules, passes, sourceRegistry)
+    try {
+      val (outs, n) = Materialize.observed(outputsOf(all),
+        tables.map { case (kind, _) => count_if(col("out_kind") === kind).as(kind) }: _*)
+      try {
+        val counts = tables.map { case (kind, _) => kind -> n.getAs[Long](kind) }.toMap
+        def rows(kind: String) = outs.filter(col("out_kind") === kind)
+        tables.foreach { case (kind, dir) =>
+          if (counts(kind) > 0) rows(kind).write.mode("append").parquet(s"$baseDir/$dir")
+        }
+        if (counts("action") > 0) handler.foreach { h =>
+          appendDeadLetter(executeActions(spark, rows("action"), h), baseDir)
+        }
+        counts
+      } finally Materialize.release(outs)
+    } finally persisted.foreach { df => df.unpersist(); () }
+  }
+
+  /** The one streaming loop: every micro-batch goes through `body`. */
+  private def routeStreaming(fired: Dataset[RuleEngine.Fired], checkpoint: String)(
+      body: DataFrame => Map[String, Long]): StreamingQuery =
     fired.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[RuleEngine.Fired], _: Long) =>
-        routeFiredBatch(batch.toDF(), baseDir); ()
-      }
+      .foreachBatch { (batch: Dataset[RuleEngine.Fired], _: Long) => body(batch.toDF()); () }
       .start()
-
-  /**
-   * K3 — Action parameter validation (reference: JSON-Schema check of
-   * Action.vars before dispatch; invalid actions get an argumenterror
-   * and are NOT retried —
-   * src/Scheduler/ActionExecutionCoordinator.php:229-239). Declarative
-   * face: required var keys per action name; returns (valid, invalid).
-   */
-  def validateActionVars(actions: DataFrame,
-      required: Map[String, Seq[String]]): (DataFrame, DataFrame) = {
-    val ok = required.foldLeft(lit(true)) { case (acc, (cmd, keys)) =>
-      when(col("name") === cmd,
-        keys.map(k => map_contains_key(col("vars"), k)).foldLeft(lit(true))(_ && _))
-        .otherwise(acc)
-    }
-    (actions.filter(ok), actions.filter(!ok))
-  }
 
   /** One action-var constraint — the JSON-Schema subset the reference
    * validates Action.vars against (justinrainbow/json-schema
@@ -203,14 +223,16 @@ object Sinks {
    * `erroredActionCommands`; src/Scheduler.php:840-884). Returns the
    * number of rows dead-lettered. */
   def appendDeadLetter(results: Dataset[ActionResult], baseDir: String): Long = {
-    // materialise exactly once — the count and the write must not
-    // re-run the side-effecting handler map upstream
-    val failed = Materialize(results.filter(!_.ok).toDF()
+    // materialise exactly once, the count on the same job — the write
+    // must not re-run the side-effecting handler map upstream
+    val (failed, m) = Materialize.observed(results.filter(!_.ok).toDF()
       .select(col("rule"), col("key"), col("name"), col("vars"), col("error"))
-      .withColumn("attempts", lit(1)))
-    val n = failed.count()
-    if (n > 0) failed.write.mode("append").parquet(s"$baseDir/dead_letter")
-    n
+      .withColumn("attempts", lit(1)), count(lit(1)).as("n"))
+    try {
+      val n = m.getAs[Long]("n")
+      if (n > 0) failed.write.mode("append").parquet(s"$baseDir/dead_letter")
+      n
+    } finally Materialize.release(failed)
   }
 
   /** Outcome of one [[recoverAndRun]] drain pass. `exhausted` > 0 means
@@ -257,58 +279,52 @@ object Sinks {
     // explicit schema (not inference) so a footer-less directory reads
     // as empty, and Try so an unreadable/corrupt queue degrades to
     // "nothing to replay" instead of crashing startup
-    val dl = Try(Materialize(spark.read.schema(deadLetterSchema).parquet(dir)
+    val (dl, d) = Try(Materialize.observed(spark.read.schema(deadLetterSchema).parquet(dir)
       .select(col("rule"), col("key"), col("name"), col("vars"),
-        col("error"), col("attempts")))) match {
-      case Success(df) => df
+        col("error"), col("attempts")),
+      count_if(col("attempts") >= maxAttempts).as("exhausted"))) match {
+      case Success(r) => r
       case Failure(_) => return RecoveryReport(0L, 0L, 0L, 0L)
     }
-    // one replay per action: count/write below re-read blocks, not the handler map
-    val results = Materialize(dl.filter(col("attempts") < maxAttempts)
-      .as[(String, String, String, Map[String, String], String, Int)]
-      .map { case (rule, key, name, vars, _, attempts) =>
-        Try(handler(name, vars)) match {
-          case Success(_) => (rule, key, name, vars, "", attempts + 1, true)
-          case Failure(e) => (rule, key, name, vars,
-            String.valueOf(e.getMessage), attempts + 1, false)
+    try {
+      // one replay per action: the counts ride on this job and the
+      // write below reads its rows, not the handler map
+      val (results, r) = Materialize.observed(dl.filter(col("attempts") < maxAttempts)
+        .as[(String, String, String, Map[String, String], String, Int)]
+        .map { case (rule, key, name, vars, _, attempts) =>
+          Try(handler(name, vars)) match {
+            case Success(_) => (rule, key, name, vars, "", attempts + 1, true)
+            case Failure(e) => (rule, key, name, vars,
+              String.valueOf(e.getMessage), attempts + 1, false)
+          }
         }
-      }
-      .toDF("rule", "key", "name", "vars", "error", "attempts", "ok"))
-    val requeued = results.filter(!col("ok")).drop("ok")
-    val exhausted = dl.filter(col("attempts") >= maxAttempts)
-    val report = RecoveryReport(
-      eligible = results.count(),
-      succeeded = results.filter(col("ok")).count(),
-      requeued = requeued.count(),
-      exhausted = exhausted.count())
-    // both sides are checkpointed, so overwriting the directory they
-    // were read from is safe; an empty union writes an empty table
-    requeued.unionByName(exhausted).write.mode("overwrite").parquet(dir)
-    report
+        .toDF("rule", "key", "name", "vars", "error", "attempts", "ok"),
+        count(lit(1)).as("eligible"), count_if(col("ok")).as("succeeded"))
+      try {
+        val eligible = r.getAs[Long]("eligible")
+        val succeeded = r.getAs[Long]("succeeded")
+        // both sides are materialized, so overwriting the directory they
+        // were read from is safe; an empty union writes an empty table
+        results.filter(!col("ok")).drop("ok")
+          .unionByName(dl.filter(col("attempts") >= maxAttempts))
+          .write.mode("overwrite").parquet(dir)
+        RecoveryReport(eligible, succeeded, eligible - succeeded, d.getAs[Long]("exhausted"))
+      } finally Materialize.release(results)
+    } finally Materialize.release(dl)
   }
 
   /**
-   * Streaming router WITH action execution and recovery: drains the
-   * dead-letter queue (attempt-capped) BEFORE the query starts — the
-   * reference's replay-before-resume contract — then per micro-batch
-   * routes outputs, executes `action` rows through `handler` and
-   * dead-letters new failures (at-least-once).
-   */
-  def routeAndExecuteStreaming(fired: Dataset[RuleEngine.Fired], baseDir: String,
-      checkpoint: String, handler: (String, Map[String, String]) => Unit,
-      maxAttempts: Int = 3): StreamingQuery = {
-    recoverAndRun(fired.sparkSession, baseDir, handler, maxAttempts)
-    startRouting(fired, baseDir, checkpoint, handler)
-  }
-
-  /**
-   * [[routeAndExecuteStreaming]] behind the FULL recovery state
-   * machine ([[Recovery.Coordinator]]): the query starts only when the
-   * coordinator reports a clean or recovered boot; a marker, an
-   * exhausted attempt cap or an active cooldown (`wait=false`) refuses
-   * to start — the caller gets the outcome instead of a query, exactly
-   * like the reference refusing to boot sources
-   * (src/Scheduler.php:766-792).
+   * [[routeFiredStreaming]] WITH action execution, behind the FULL
+   * recovery state machine ([[Recovery.Coordinator]]): the dead-letter
+   * queue is drained (attempt-capped) BEFORE the query starts — the
+   * reference's replay-before-resume contract — and the query starts
+   * only when the coordinator reports a clean or recovered boot; a
+   * marker, an exhausted attempt cap or an active cooldown
+   * (`wait=false`) refuses to start — the caller gets the outcome
+   * instead of a query, exactly like the reference refusing to boot
+   * sources (src/Scheduler.php:766-792). Per micro-batch, [[route]]
+   * appends the tables, then executes the `action` rows through
+   * `handler` and dead-letters new failures (at-least-once).
    */
   def routeAndExecuteGuarded(fired: Dataset[RuleEngine.Fired], baseDir: String,
       checkpoint: String, handler: (String, Map[String, String]) => Unit,
@@ -316,26 +332,9 @@ object Sinks {
       maxAttempts: Int = 3, wait: Boolean = true): Either[Recovery.StartOutcome, StreamingQuery] =
     coordinator.start(fired.sparkSession, handler, maxAttempts, wait) match {
       case Recovery.Started(_) =>
-        Right(startRouting(fired, baseDir, checkpoint, handler))
+        Right(routeStreaming(fired, checkpoint)(route(_, baseDir, handler = Some(handler))))
       case other => Left(other)
     }
-
-  /** Per-micro-batch routing + action execution + dead-lettering (the
-   * at-least-once body shared by the plain and guarded faces). */
-  private def startRouting(fired: Dataset[RuleEngine.Fired], baseDir: String,
-      checkpoint: String, handler: (String, Map[String, String]) => Unit): StreamingQuery = {
-    val spark = fired.sparkSession
-    fired.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[RuleEngine.Fired], _: Long) =>
-        val df = batch.toDF()
-        routeFiredBatch(df, baseDir)
-        val actions = outputsOf(df).filter(col("out_kind") === "action")
-        appendDeadLetter(executeActions(spark, actions, handler), baseDir)
-        ()
-      }
-      .start()
-  }
 
   /** Derived events (rule chaining, J6): `event`-kind outputs re-enter
    * the engine as new Events stamped with the fire time (reference
@@ -420,10 +419,10 @@ object Sinks {
    * (reference futureTick re-entry: a rule's emitted Event is fed back
    * into handle() on the next loop tick;
    * src/CorrelationEngine.php:372-391 + src/Scheduler.php:795-812).
-   * Per micro-batch: the live engine's fires are routed, then their
-   * `event`-kind outputs run through the rules' batch interpreter
-   * (bounded passes over an acyclic rule DAG — the same loop as
-   * [[runBatchChained]]) and the chained fires are routed too. A
+   * Per micro-batch: the live engine's fires' `event`-kind outputs run
+   * through the rules' batch interpreter (bounded passes over an
+   * acyclic rule DAG — the same loop as [[runBatchChained]]), and the
+   * live and chained fires are routed together in one pass. A
    * rule's emitted event therefore completes a downstream rule in the
    * SAME trigger, not a later one.
    *
@@ -436,15 +435,5 @@ object Sinks {
   def routeChainedStreaming(fired: Dataset[RuleEngine.Fired], rules: Seq[RuleSpec],
       baseDir: String, checkpoint: String, passes: Int = 3,
       sourceRegistry: Map[String, (SparkSession, Map[String, String]) => Dataset[Event]] = Map.empty): StreamingQuery =
-    fired.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[RuleEngine.Fired], _: Long) =>
-        val spark = batch.sparkSession
-        val fires0 = batch.toDF().persist()
-        val (all, persisted) = chainLoop(spark, fires0, rules, passes, sourceRegistry)
-        routeFiredBatch(all, baseDir)
-        persisted.foreach { df => df.unpersist(); () }
-        ()
-      }
-      .start()
+    routeStreaming(fired, checkpoint)(route(_, baseDir, rules, passes, sourceRegistry))
 }

@@ -164,7 +164,10 @@ class DedupSpec extends SparkSpec {
     // 1. a checkpoint directory on the context (what Spark's own
     // spark.checkpoint.dir sets on a cluster) turns every Materialize
     // break into a reliable checkpoint: each loop/corpus operator must
-    // give its default-path result and leave rows in the store
+    // give its default-path result and write rows to the store. Its
+    // released breaks' files are deleted again, so the writes show as
+    // jobs: Spark names a reliable break's job "checkpoint at …" and a
+    // local one "localCheckpoint at …"
     val runs = Seq[(String, () => Any)](
       "duplicateClusters" -> (() => Dedup.duplicateClusters(df).collect()
         .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster")).toMap),
@@ -177,9 +180,10 @@ class DedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ck")
     spark.sparkContext.setCheckpointDir(dir.toString)
     try runs.foreach { case (name, run) =>
-      val before = fileCount(dir)
-      assert(run() == default(name), name)
-      assert(fileCount(dir) > before, s"$name wrote no checkpoint files")
+      var got: Any = null
+      val jobs = jobsOf { got = run() }
+      assert(got == default(name), name)
+      assert(jobs.exists(_.startsWith("checkpoint at ")), s"$name wrote no checkpoint files")
     } finally spark.sparkContext.setCheckpointDir(null) // local mode: clears it
     assert(spark.sparkContext.getCheckpointDir.isEmpty)
     // 2. threshold 0 disables the small-round mode → the full AQE

@@ -5,8 +5,11 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
+import graft.rules.OutputData
+import graft.streaming.{RuleEngine, Sinks}
 
 class MaterializeSpec extends SparkSpec {
   import MaterializeSpec._
@@ -40,6 +43,44 @@ class MaterializeSpec extends SparkSpec {
     assert(pinned.isEmpty, s"new persisted RDDs: $pinned")
   }
 
+  test("leak: routeFiredBatch releases its materialized outputs") {
+    val dir = Files.createTempDirectory("leak-route").toString
+    val pinned = newPersisted(Sinks.routeFiredBatch(fires(spark), dir))
+    assert(pinned.isEmpty, s"new persisted RDDs: $pinned")
+  }
+
+  test("leak: appendDeadLetter releases its materialized failures") {
+    val dir = Files.createTempDirectory("leak-dlq").toString
+    val pinned = newPersisted(
+      Sinks.appendDeadLetter(Sinks.executeActions(spark, actions(spark), failing), dir))
+    assert(pinned.isEmpty, s"new persisted RDDs: $pinned")
+  }
+
+  test("leak: recoverAndRun releases the queue and the replay results") {
+    val dir = Files.createTempDirectory("leak-drain").toString
+    Sinks.appendDeadLetter(Sinks.executeActions(spark, actions(spark), failing), dir)
+    val pinned = newPersisted(Sinks.recoverAndRun(spark, dir, failing))
+    assert(pinned.isEmpty, s"new persisted RDDs: $pinned")
+  }
+
+  test("reliable breaks: release deletes their files, so routing, dead-lettering and draining leave the store as found") {
+    val out = Files.createTempDirectory("ck-route").toString
+    val store = Files.createTempDirectory("graft-ck")
+    spark.sparkContext.setCheckpointDir(store.toString)
+    try {
+      val start = paths(store)
+      val m = Materialize(fires(spark))
+      assert(paths(store) != start, "no reliable checkpoint written")
+      Materialize.release(m)
+      assert(paths(store) == start)
+      val counts = Sinks.routeFiredBatch(fires(spark), out)
+      val n = Sinks.appendDeadLetter(Sinks.executeActions(spark, actions(spark), failing), out)
+      val r = Sinks.recoverAndRun(spark, out, failing)
+      assert(counts("action") == 1L && n == 1L && r == Sinks.RecoveryReport(1, 0, 1, 0))
+      assert(paths(store) == start)
+    } finally spark.sparkContext.setCheckpointDir(null) // local mode: clears it
+  }
+
   test("source audit: every lineage break in src/main goes through Materialize") {
     val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
     assert(Files.isDirectory(root), s"no source tree at $root")
@@ -55,11 +96,18 @@ class MaterializeSpec extends SparkSpec {
     } yield s"${root.relativize(p)}:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("\n"))
   }
+
+  test("source audit: Sinks routes every stream through one foreachBatch") {
+    val sinks = Paths.get(sys.props("user.dir"), "src", "main", "scala", "graft", "streaming",
+      "Sinks.scala")
+    val calls = Files.readAllLines(sinks).asScala.count(_.contains(".foreachBatch"))
+    assert(calls == 1, s"foreachBatch calls in Sinks.scala: $calls")
+  }
 }
 
-/** Small inputs for the four operators whose loops or corpora go
- * through [[Materialize]] — shared with the reliable-policy test in
- * DedupSpec. */
+/** Small inputs for the operators whose loops, corpora or routed
+ * batches go through [[Materialize]] — the loop and corpus inputs are
+ * shared with the reliable-policy test in DedupSpec. */
 object MaterializeSpec {
   /** A chain (many CC rounds) plus an isolated pair. */
   def chainPairs(spark: SparkSession): DataFrame = {
@@ -89,10 +137,27 @@ object MaterializeSpec {
     }.toDF("vec_id", "embedding")
   }
 
-  /** Files under `dir`, recursively. */
-  def fileCount(dir: Path): Long = {
+  /** One fire with an action, a memory write and a derived event. */
+  def fires(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    val t = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    Seq(RuleEngine.Fired("r1", "k1", "complete", t, 2, t, t, Seq(
+      OutputData.action("notify", Map("ch" -> "email")),
+      OutputData.memory("orders", "k1", "done"),
+      OutputData.event("paid")))).toDF()
+  }
+
+  def actions(spark: SparkSession): DataFrame =
+    Sinks.outputsOf(fires(spark)).filter(col("out_kind") === "action")
+
+  /** An action handler whose downstream is always down. */
+  val failing: (String, Map[String, String]) => Unit =
+    (_, _) => throw new RuntimeException("downstream down")
+
+  /** Paths under `dir` (files and directories), relative to it. */
+  def paths(dir: Path): Set[String] = {
     val s = Files.walk(dir)
-    try s.filter(p => Files.isRegularFile(p)).count()
+    try s.iterator().asScala.map(p => dir.relativize(p).toString).toSet
     finally s.close()
   }
 }

@@ -9,11 +9,14 @@ import graft.model.Event
 import graft.rules.{OutputData, RuleSpec}
 
 /** Shared JVM-wide probe (local mode: executor = driver JVM) counting
- * handler invocations across serialized closures. */
+ * handler and rule-callback invocations across serialized closures. */
 object SinksRecoveryProbe {
   val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+  val callbacks = new java.util.concurrent.atomic.AtomicInteger(0)
   @volatile var failing = true
-  def reset(failing: Boolean): Unit = { this.failing = failing; calls.set(0) }
+  def reset(failing: Boolean): Unit = {
+    this.failing = failing; calls.set(0); callbacks.set(0)
+  }
   val handler: (String, Map[String, String]) => Unit = (_, _) => {
     calls.incrementAndGet()
     if (failing) throw new RuntimeException("smtp down")
@@ -92,10 +95,10 @@ class SinksSpec extends SparkSpec {
 
   test("K3 action validation splits on required vars; invalid not retried") {
     val outs = Sinks.outputsOf(fired.toDF()).filter("out_kind = 'action'")
-    val (valid, invalid) = Sinks.validateActionVars(outs,
-      Map("notify" -> Seq("ch", "missing_key")))
+    val (valid, invalid) = Sinks.validateActionVarsTyped(outs,
+      Map("notify" -> Seq(Sinks.VarSpec("ch"), Sinks.VarSpec("missing_key"))))
     assert(valid.count() == 0 && invalid.count() == 1)
-    val (v2, i2) = Sinks.validateActionVars(outs, Map("notify" -> Seq("ch")))
+    val (v2, i2) = Sinks.validateActionVarsTyped(outs, Map("notify" -> Seq(Sinks.VarSpec("ch"))))
     assert(v2.count() == 1 && i2.count() == 0)
   }
 
@@ -112,6 +115,51 @@ class SinksSpec extends SparkSpec {
     assert(spark.read.parquet(s"$base/out/actions").count() == 1)
     assert(spark.read.parquet(s"$base/out/events").count() == 1)
     assert(spark.read.parquet(s"$base/out/memory_writes").count() == 1)
+  }
+
+  test("batch router: one materializing job plus one append per non-empty kind") {
+    import spark.implicits._
+    // three kinds (action, memory, event), local rows: no upstream shuffle
+    val local = spark.createDataset(fired.collect().toSeq).toDF()
+    val dir = Files.createTempDirectory("sinkjobs").toString
+    var counts = Map.empty[String, Long]
+    val jobs = jobsOf { counts = Sinks.routeFiredBatch(local, dir) }
+    assert(counts == Map("action" -> 1L, "memory" -> 1L, "event" -> 1L, "source" -> 0L))
+    assert(jobs.size == 1 + 3, jobs.mkString("jobs: ", "; ", ""))
+  }
+
+  test("guarded streaming router runs each fire's rule callback and action handler once") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val counted = RuleSpec.sequenceWithTimeout(
+      "order_payment", Seq(Set("signup"), Set("purchase")), Duration.ofMinutes(60),
+      _.payload("key"),
+      onComplete = _ => {
+        SinksRecoveryProbe.callbacks.incrementAndGet()
+        Seq(OutputData.action("notify", Map("ch" -> "email")))
+      },
+      onTimeout = _ => Nil)
+    val base = Files.createTempDirectory("sinkonce").toString
+    SinksRecoveryProbe.reset(failing = true)
+    val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
+    val query = Sinks.routeAndExecuteGuarded(
+      RuleEngine.runStreaming(stream.toDS(), Seq(counted)), base, s"$base/ck",
+      SinksRecoveryProbe.handler, new Recovery.Coordinator(base)) match {
+      case Right(q) => q
+      case Left(other) => fail(s"unexpected: $other")
+    }
+    try {
+      stream.addData(
+        ev("2024-01-01 10:00:00", "signup", "u1", "1"),
+        ev("2024-01-01 10:00:00", "signup", "u2", "2"),
+        ev("2024-01-01 10:20:00", "purchase", "u1", "3"),
+        ev("2024-01-01 10:30:00", "purchase", "u2", "4"))
+      query.processAllAvailable()
+    } finally query.stop()
+    assert(spark.read.parquet(s"$base/actions").count() == 2)
+    assert(SinksRecoveryProbe.callbacks.get() == 2)
+    assert(SinksRecoveryProbe.calls.get() == 2)
+    assert(spark.read.parquet(s"$base/dead_letter").count() == 2)
   }
 
   test("K7 rule statistics: per-(rule, kind) fire counters like the reference's stats block") {
