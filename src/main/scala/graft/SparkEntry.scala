@@ -2146,7 +2146,7 @@ object SparkEntry {
        |      >> ((o + k) % 8)) & 1) AS bit
        |  FROM (
        |    SELECT media_id, h, gx, gy,
-       |      ${graft.tools.ImageDupFixture.Vp8lHeaderBits}
+       |      ${ImageDupLayout.Vp8lHeaderBits}
        |        + 25 * (36 * gy + 2 * gx) AS o
        |    FROM im_webp,
        |      generate_series(0, 8) tx(gx), generate_series(0, 7) ty(gy)) t,
@@ -2171,14 +2171,14 @@ object SparkEntry {
        |  -- rotate-before-hash decode applies.
        |  SELECT media_id, hex(media) AS h,
        |    ('0x' || substr(hex(media),
-       |      2 * ${graft.tools.ImageDupFixture.ExifOrientOffset} + 1, 2))::INT AS o
+       |      2 * ${ImageDupLayout.ExifOrientOffset} + 1, 2))::INT AS o
        |  FROM read_parquet('${Tables.imagedupFixturePath}')
        |  WHERE substr(hex(media), 1, 16) = '89504E470D0A1A0A'
        |    AND substr(hex(media), 75, 8) = '65584966'),
        | im_xcells AS (
        |  SELECT media_id, gx, gy,
        |    ('0x' || substr(h,
-       |      2 * (${graft.tools.ImageDupFixture.ExifPixelOffset}
+       |      2 * (${ImageDupLayout.ExifPixelOffset}
        |           + v * (1 + 3 * ws) + 1 + 3 * u) + 1, 2))::INT AS val
        |  FROM (
        |    SELECT media_id, h, gx, gy,
@@ -4769,7 +4769,7 @@ object SparkEntry {
          |         ELSE 'other' END AS container,
          |    CASE WHEN substr(h, 1, 16) = '89504E470D0A1A0A'
          |           AND n IN (948,
-         |             ${graft.tools.ImageDupFixture.ExifPngLengths.mkString(", ")})
+         |             ${ImageDupLayout.ExifPngLengths.mkString(", ")})
          |           THEN 1
          |         WHEN substr(h, 1, 8) = '52494646'
          |              AND substr(h, 25, 8) = '5650384C' THEN 1

@@ -290,11 +290,6 @@ object Archives {
   private val CharsetParamRe =
     "(?i)charset\\s*=\\s*[\"']?([A-Za-z0-9_.:-]+)".r
 
-  private def httpBodyCharset(ct: Option[String]): java.nio.charset.Charset =
-    ct.flatMap(CharsetParamRe.findFirstMatchIn(_))
-      .map(m => charsetByName(m.group(1).toLowerCase))
-      .getOrElse(java.nio.charset.StandardCharsets.UTF_8)
-
   /** Charset of the DECODED entity bytes, in the precedence browsers
    * implement (WHATWG encoding sniffing, trimmed to what a crawl
    * pipeline needs): a BYTE-ORDER MARK wins over everything (UTF-8 /

@@ -177,11 +177,6 @@ object AudioFp {
         })
   }
 
-  /** Fixture-build hook: the fingerprint's decode path, visible to
-   * the tools' build-time contract assertions. */
-  private[graft] def monoSamplesForTest(b: Array[Byte]): Option[Array[Float]] =
-    monoSamples(b)
-
   /** In-place iterative radix-2 FFT (re, im of length n = 2^k). */
   private[ops] def fft(re: Array[Double], im: Array[Double]): Unit = {
     val n = re.length

@@ -25,7 +25,7 @@ package graft.ops
  * Validation story (no libFLAC exists in this container, unlike the
  * libwebp ground truth the VP8 decoders were pinned against —
  * documented honestly): the fixture encoder
- * ([[graft.tools.FlacEncoder]]) is an independent spec
+ * (FlacEncoder, in test scope) is an independent spec
  * implementation of the ENCODE direction, and STREAMINFO's MD5 field
  * closes the loop end-to-end — the encoder stamps the MD5 of the
  * SOURCE PCM before encoding, the decoder hashes its RECONSTRUCTED

@@ -471,24 +471,6 @@ object Mp3 {
     }
   }
 
-  /** Encoder-direction inverse butterflies (tools.Mp3Encoder).
-   * `sbLimit` mirrors [[aliasReduce]]'s: 31 for long granules, 1 for
-   * MIXED blocks (only the sb0/sb1 boundary), 0 for pure short. */
-  private[graft] def aliasForward(xr: Array[Double], sbLimit: Int = 31): Unit = {
-    var sb = 1
-    while (sb <= sbLimit) {
-      var i = 0
-      while (i < 8) {
-        val a = xr(18 * sb - 1 - i)
-        val b = xr(18 * sb + i)
-        xr(18 * sb - 1 - i) = a * Mp3Tables.aliasCs(i) + b * Mp3Tables.aliasCa(i)
-        xr(18 * sb + i) = b * Mp3Tables.aliasCs(i) - a * Mp3Tables.aliasCa(i)
-        i += 1
-      }
-      sb += 1
-    }
-  }
-
   // ------------------------------------------------------------ IMDCT
   /** Window of the given block type over 36 points (types 0, 1, 3). */
   private def longWindow(blockType: Int): Array[Double] =

@@ -6,7 +6,7 @@ package graft.ops
  * the transformation a 100 TB crawl's dedup pass must both DETECT
  * (the q_m38/q_m40 faces) and be able to REPRODUCE for measured
  * coverage classes. Round 20: moved out of the fixture tools —
- * SparkEntry's q_m40 previously called `graft.tools.TsFixture` at
+ * SparkEntry's q_m40 previously called the TsFixture generator at
  * query time, a library-surface-depends-on-fixture-tool layering the
  * round-19 verdict flagged; the muxers now live here and the fixture
  * tools delegate.

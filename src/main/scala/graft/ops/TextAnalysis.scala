@@ -691,40 +691,6 @@ object TextAnalysis {
     merges.result().toDF("merge_round", "pair_left", "pair_right", "n")
   }
 
-  /** The pre-r22 full-recount BPE loop -- every round re-derives the
-   * complete pair table from the current vocabulary state. Kept as
-   * the EQUIVALENCE REFERENCE for [[bpeTrain]]'s incremental
-   * pair-count maintenance (TextAnalysisSpec proves identical merge
-   * tables, ties included, on adversarial corpora); not a query
-   * path. */
-  private[ops] def bpeTrainRecount(spark: org.apache.spark.sql.SparkSession,
-      documents: DataFrame, k: Int = 8): DataFrame = {
-    import spark.implicits._
-    var cur = bpeBase(documents).persist()
-    val states = scala.collection.mutable.ArrayBuffer(cur)
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    var r = 1
-    var dry = false
-    while (r <= k && !dry) {
-      val best = bpePairCounts(cur)
-        .orderBy(col("n").desc, col("a"), col("b"))
-        .limit(1).collect()
-      if (best.isEmpty) dry = true
-      else {
-        val (a, b, n) = (best(0).getString(0), best(0).getString(1),
-          best(0).getLong(2))
-        merges += ((r, a, b, n))
-        cur = cur.withColumn("w", call_function("replace", col("w"),
-          lit(bpeS1 + a + bpeS2 + bpeS1 + b + bpeS2),
-          lit(bpeS1 + a + b + bpeS2))).persist()
-        states += cur
-      }
-      r += 1
-    }
-    states.foreach(_.unpersist())
-    merges.result().toDF("merge_round", "pair_left", "pair_right", "n")
-  }
-
   /** Sentinel bytes framing each symbol of an encoded BPE word:
    * `<1>sym<2>` per symbol. Words containing either byte are dropped
    * from training (bpeBase), so frame parsing is unambiguous. */
@@ -732,8 +698,7 @@ object TextAnalysis {
   private[ops] val bpeS2 = "\u0002"
 
   /** The sentinel-framed distinct-word frequency table (w, cnt) -- the
-   * BPE training state. Shared by [[bpeTrain]] and the full-recount
-   * reference [[bpeTrainRecount]]. The encoding is the native
+   * BPE training state of [[bpeTrain]]. The encoding is the native
    * graft_sentinel_encode pass (r22) — byte-identical to the previous
    * interpreted `concat_ws(transform(sequence…substr))` chain (pinned
    * in TextExpressionsSpec). */

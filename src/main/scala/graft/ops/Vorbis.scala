@@ -11,7 +11,7 @@ package graft.ops
  * residue partitioning, inverse coupling, IMDCT, lapped windows) is
  * implemented from the spec text; the implementation is validated by
  * inverting an independent in-repo encoder direction
- * ([[graft.tools.VorbisEncoder]]) exactly — the FLAC/MP3 pattern
+ * (VorbisEncoder, in test scope) exactly — the FLAC/MP3 pattern
  * (reference: php-ec has no media decode at all; this is pipeline
  * surface beyond SURVEY §2).
  *
@@ -475,7 +475,7 @@ object Vorbis {
 
   /** Amplitude synthesis (spec step 2: neighbor prediction, room
    * folding) + curve synthesis from the RAW post values — shared
-   * with the encoder direction ([[graft.tools.VorbisEncoder]]) so
+   * with the encoder direction (VorbisEncoder, in test scope) so
    * analysis divides by the EXACT curve synthesis renders. */
   private[graft] def floor1Synth(xList: Array[Int], y: Array[Int],
       multiplier: Int, n2: Int, out: Array[Float]): Unit = {

@@ -277,6 +277,13 @@ class AudioFpSpec extends SparkSpec {
     val ima = AifcFixture.aifc(id, "ima4")
     assert(AudioFp.audioContainer(ima) == "aiff")
     assert(AudioFp.monoSamples(ima).isEmpty)
+    // the fixture contract on every committed row: all but ima4 decode
+    // to their frame count
+    (0L until 200L).foreach { id =>
+      val s = AudioFp.monoSamples(AifcFixture.row(id)._2)
+      if (id % 4 == 3) assert(s.isEmpty, s"ima4 id=$id decoded")
+      else assert(s.exists(_.length == AifcFixture.frames(id)), s"id=$id did not decode")
+    }
     // a plain-AIFF reader regression guard: the JDK-written AIFF
     // fixture class still decodes through the same (widened) reader
     import graft.tools.AudioFixture

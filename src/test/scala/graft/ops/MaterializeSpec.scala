@@ -81,27 +81,46 @@ class MaterializeSpec extends SparkSpec {
     } finally spark.sparkContext.setCheckpointDir(null) // local mode: clears it
   }
 
+  private val mainRoot = Paths.get(sys.props("user.dir"), "src", "main", "scala")
+
+  /** Every Scala file under `src/main/scala`. */
+  private def mainSources(): List[Path] = {
+    assert(Files.isDirectory(mainRoot), s"no source tree at $mainRoot")
+    val walk = Files.walk(mainRoot)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
   test("source audit: every lineage break in src/main goes through Materialize") {
-    val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
-    assert(Files.isDirectory(root), s"no source tree at $root")
     val banned = Seq("localCheckpoint(", ".checkpoint(", "setCheckpointDir")
-    val walk = Files.walk(root)
-    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
+    val files = mainSources()
     assert(files.exists(_.getFileName.toString == "Materialize.scala"))
     val hits = for {
       p <- files if p.getFileName.toString != "Materialize.scala"
       (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
       if banned.exists(line.contains)
-    } yield s"${root.relativize(p)}:${i + 1}: ${line.trim}"
+    } yield s"${mainRoot.relativize(p)}:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("source audit: Sinks routes every stream through one foreachBatch") {
-    val sinks = Paths.get(sys.props("user.dir"), "src", "main", "scala", "graft", "streaming",
-      "Sinks.scala")
+    val sinks = mainRoot.resolve(Paths.get("graft", "streaming", "Sinks.scala"))
     val calls = Files.readAllLines(sinks).asScala.count(_.contains(".foreachBatch"))
     assert(calls == 1, s"foreachBatch calls in Sinks.scala: $calls")
+  }
+
+  test("source audit: the engine compiles no fixture, encoder or probe code") {
+    val tools = mainRoot.resolve(Paths.get("graft", "tools"))
+    val list = Files.list(tools)
+    val kept = try list.iterator().asScala.map(_.getFileName.toString).toList.sorted
+      finally list.close()
+    assert(kept == List("EntrySmoke.scala", "PlanDump.scala"), kept.mkString(", "))
+    val hits = for {
+      p <- mainSources() if !p.startsWith(tools)
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if line.contains("graft.tools")
+    } yield s"${mainRoot.relativize(p)}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }
 

@@ -11,6 +11,48 @@ class TextAnalysisSpec extends SparkSpec {
     rows.toSeq.toDF("doc_id", "lang", "text")
   }
 
+  /** The full-recount BPE loop: every round re-derives the complete
+   * pair table from the current vocabulary state. The equivalence
+   * reference for bpeTrain's incremental pair-count maintenance, built
+   * only from Spark's and graft.functions.Texts' public columns. */
+  private def bpeTrainRecount(documents: DataFrame, k: Int = 8): DataFrame = {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.functions.Texts
+    import TextAnalysis.{bpeS1, bpeS2}
+    var cur = documents
+      .select(explode(split(col("text"), " ")).as("w"))
+      .filter(length(col("w")) >= 2 &&
+        !col("w").contains(bpeS1) && !col("w").contains(bpeS2))
+      .groupBy("w").agg(count(lit(1)).as("cnt"))
+      .select(Texts.sentinelEncode(col("w")).as("w"), col("cnt"))
+      .persist()
+    val states = scala.collection.mutable.ArrayBuffer(cur)
+    val merges = Seq.newBuilder[(Int, String, String, Long)]
+    var r = 1
+    var dry = false
+    while (r <= k && !dry) {
+      val best = cur
+        .select(col("cnt"), explode(Texts.symbolPairs(col("w"))).as("p"))
+        .groupBy(col("p.a"), col("p.b")).agg(sum("cnt").as("n"))
+        .orderBy(col("n").desc, col("a"), col("b"))
+        .limit(1).collect()
+      if (best.isEmpty) dry = true
+      else {
+        val (a, b, n) = (best(0).getString(0), best(0).getString(1),
+          best(0).getLong(2))
+        merges += ((r, a, b, n))
+        cur = cur.withColumn("w", call_function("replace", col("w"),
+          lit(bpeS1 + a + bpeS2 + bpeS1 + b + bpeS2),
+          lit(bpeS1 + a + b + bpeS2))).persist()
+        states += cur
+      }
+      r += 1
+    }
+    states.foreach(_.unpersist())
+    merges.result().toDF("merge_round", "pair_left", "pair_right", "n")
+  }
+
   test("token counts: whitespace vs BPE-ish regex") {
     val df = docs((1L, "en", "hello world 42 foo-bar"))
     val r = TextAnalysis.tokenCounts(df).collect().head
@@ -212,7 +254,7 @@ class TextAnalysisSpec extends SparkSpec {
       val df = Seq(text).toDF("text")
       val inc = TextAnalysis.bpeTrain(spark, df)
         .as[(Int, String, String, Long)].collect().toSeq
-      val ref = TextAnalysis.bpeTrainRecount(spark, df)
+      val ref = bpeTrainRecount(df)
         .as[(Int, String, String, Long)].collect().toSeq
       assert(inc == ref, s"incremental != recount for corpus '$text'")
     }
